@@ -807,6 +807,7 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     malformed lines injected, parsed back with parse_csv_lines. The oracle
     reads the table directly — if the parser leaked a malformed row or
     mangled a field, counts/values mismatch."""
+    from spatialflink_spark.session import local_table
     from spatialflink_spark.sources.formats import parse_csv_lines
 
     docs = _docs(spark, sf_dir)
@@ -826,8 +827,8 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cast(doc_id as string), {guarded_source}, text)"
         ).alias("value")
     )
-    bad = spark.createDataFrame(
-        [("garbage",), ("not_a_ts,not_an_id,src,text",)], "value string"
+    bad = local_table(
+        spark, [("garbage",), ("not_a_ts,not_an_id,src,text",)], "value string"
     )
     parsed = parse_csv_lines(lines.unionByName(bad))
     return parsed.select(

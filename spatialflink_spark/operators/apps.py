@@ -36,6 +36,7 @@ from spatialflink_spark.config import GridConfig, HASH_MOD, QueryPoint
 from spatialflink_spark.operators.cells import with_cell
 from spatialflink_spark.operators.knn import knn_windowed
 from spatialflink_spark.operators.range_query import range_query
+from spatialflink_spark.session import local_table
 
 FENCE_CELLS = (3, 4, 5)  # analog of the q5 fence polygon (static region)
 BLOCKED_CELLS = (0, 1)  # analog of the exclusion polygons
@@ -87,7 +88,7 @@ def exclude_cells(seq: DataFrame, grid: GridConfig) -> DataFrame:
     (The blocked set is tiny and static — Catalyst broadcasts it; at scale
     this is the same BroadcastProcessFunction shape as the reference.)"""
     spark = seq.sparkSession
-    blocked = spark.createDataFrame([(c,) for c in BLOCKED_CELLS], "cell int")
+    blocked = local_table(spark, [(c,) for c in BLOCKED_CELLS], "cell int")
     kept = with_cell(seq, grid).join(F.broadcast(blocked), "cell", "left_anti")
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -101,7 +102,7 @@ def include_cells(seq: DataFrame, grid: GridConfig) -> DataFrame:
     proximity set — the mirror of exclude_cells' anti-join; same per-source
     survivor-count output shape."""
     spark = seq.sparkSession
-    included = spark.createDataFrame([(c,) for c in FENCE_CELLS], "cell int")
+    included = local_table(spark, [(c,) for c in FENCE_CELLS], "cell int")
     kept = with_cell(seq, grid).join(F.broadcast(included), "cell", "left_semi")
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from spatialflink_spark.config import GridConfig, QueryPoint
 from spatialflink_spark.operators.range_query import range_query
+from spatialflink_spark.session import local_table
 
 
 def knn_windowed(
@@ -73,34 +74,41 @@ def knn_windowed(
     partial = (
         cell_doc_min.withColumn("_r", F.row_number().over(w_cell))
         .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
+        .select("ws", "q_id", "k", "doc_id", "_m.dist", "_m.seq_no")
     )
 
-    # stage 2: global merge per (ws, q_id): dedup per doc_id keep min dist
-    # (KNNQuery.java:226-238), then re-rank and cut to k. Same single-
-    # exchange trick: partition once on (ws, q_id), the groupBy and the
-    # final rank window both reuse it; input is already <= cells * k rows
-    # per (ws, q_id).
-    per_doc = partial.repartition("ws", "q_id").groupBy(
-        "ws", "q_id", "k", "doc_id"
-    ).agg(
-        F.min("_m").alias("_m2")
-    ).select(
-        "ws", "q_id", "k", "doc_id",
-        F.col("_m2.dist").alias("dist"),
-        F.col("_m2.seq_no").alias("seq_no"),
+    # stage 2: global merge per (ws, q_id), shared with the streaming merge
+    return knn_merge(partial)
+
+
+def knn_merge(cut: DataFrame) -> DataFrame:
+    """Stage 2 of the two-stage kNN, shared by the batch operator above and
+    the streaming pipeline's per-micro-batch merge (pipeline.finalize_knn):
+    per-doc dedup keeping the min (dist, seq_no) ACROSS cells
+    (KNNQuery.java:226-238), then re-rank per (ws, q_id) and cut to k.
+
+    `cut` holds per-cell top-k rows (ws, q_id, k, doc_id, dist, seq_no), so
+    its input is already <= cells * k rows per (ws, q_id). ONE exchange:
+    partition once on (ws, q_id); the per-doc groupBy (its keys are a
+    superset) and the final rank window both reuse it.
+    Returns (ws, q_id, rank, doc_id, seq_no, dist)."""
+    per_doc = (
+        cut.repartition("ws", "q_id")
+        .groupBy("ws", "q_id", "k", "doc_id")
+        .agg(F.min(F.struct("dist", "seq_no")).alias("_m"))
     )
-    w_final = Window.partitionBy("ws", "q_id").orderBy("dist", "doc_id")
+    w_final = Window.partitionBy("ws", "q_id").orderBy(
+        F.col("_m.dist"), F.col("doc_id")
+    )
     return (
         per_doc.withColumn("rank", F.row_number().over(w_final))
         .where(F.col("rank") <= F.col("k"))
-        .select("ws", "q_id", "rank", "doc_id", "seq_no", "dist")
+        .select(
+            "ws", "q_id", "rank", "doc_id",
+            F.col("_m.seq_no").alias("seq_no"),
+            F.col("_m.dist").alias("dist"),
+        )
     )
-
-
-def knn_windowed_qdf(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
-    """Convenience alias mirroring the reference's run() naming."""
-    return knn_windowed(seq_with_ws, grid, qs)
 
 
 def knn_unbounded(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
@@ -111,8 +119,8 @@ def knn_unbounded(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     from pyspark.sql import functions as F2
 
     spark = seq_with_ws.sparkSession
-    qdf = spark.createDataFrame(
-        [(q.q_id, q.q_n_tok, q.k) for q in qs], "q_id string, q_n_tok int, k int"
+    qdf = local_table(
+        spark, [(q.q_id, q.q_n_tok, q.k) for q in qs], "q_id string, q_n_tok int, k int"
     )
     cand = seq_with_ws.join(F2.broadcast(qdf)).withColumn(
         "dist", F2.expr("abs(n_tok - q_n_tok)")
@@ -171,7 +179,8 @@ def knn_unbounded_pruned(
         "ws", "cell", "doc_id", "seq_no", "n_tok"
     ).persist()
     try:
-        qdf = spark.createDataFrame(
+        qdf = local_table(
+            spark,
             [(q.q_id, q.q_n_tok, q.k, grid.cell_of(q.q_n_tok)) for q in qs],
             "q_id string, q_n_tok int, k int, qc int",
         )

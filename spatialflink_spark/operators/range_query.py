@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig, QueryPoint
 from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.session import local_table
 
 
 def query_cells_df(
@@ -42,7 +43,8 @@ def query_cells_df(
             rows.append((q.q_id, q.q_n_tok, q.radius, q.k, cell, True))
         for cell in sorted(c):
             rows.append((q.q_id, q.q_n_tok, q.radius, q.k, cell, False))
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "q_id string, q_n_tok int, radius int, k int, cell int, guaranteed boolean",
     )
@@ -91,7 +93,7 @@ def range_count_prefix(
     for q in qs:
         g = grid.guaranteed_cells(q.q_n_tok, q.radius)
         rows.append((q.q_id, min(g) if g else -1, max(g) if g else -2))
-    probes = spark.createDataFrame(rows, "q_id string, g_lo int, g_hi int")
+    probes = local_table(spark, rows, "q_id string, g_lo int, g_hi int")
 
     # cum_at(X) = cum value at the last cell <= X (0 if none): O(cells) scan
     # of the in-memory structure, no data rows involved

@@ -643,6 +643,8 @@ def search_ivf_index(
     relation. The probed scan is the only corpus-wide I/O in the plan.
     Answer-identical to cosine_topk_ivf_kmeans at the same (n_centroids,
     iters, n_probe) — pinned by an equivalence test."""
+    from spatialflink_spark.session import local_table
+
     corpus = spark.read.parquet(f"{path}/corpus")
     qrows = (
         corpus.where(F.col("vec_id") == QUERY_VEC_ID)
@@ -662,7 +664,7 @@ def search_ivf_index(
         for row in cents
     )
     probed_cids = [cid for _, cid in ranked[:n_probe]]
-    q_lit = spark.createDataFrame([(q_emb_vals,)], "q_emb array<float>").withColumn(
+    q_lit = local_table(spark, [(q_emb_vals,)], "q_emb array<float>").withColumn(
         "_snq", F.expr(_norm_expr("q_emb"))
     )
     cand = (

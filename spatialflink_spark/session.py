@@ -12,8 +12,9 @@ Scale stance (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -123,3 +124,29 @@ def ensure_pyfiles(spark: SparkSession) -> None:
                                    os.path.basename(pkg_dir))
     sc.addPyFile(zip_path)
     sc._spatialflink_pyfiles = True
+
+
+def local_table(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A tiny driver-side table (query points, cell sets, probe spans) as a
+    JVM-local relation: it plans as a LocalTableScan, so broadcasting or
+    joining it starts no task. `spark.createDataFrame(<list>, ddl)` instead
+    parallelizes a Python RDD, and every query over it then starts a Python
+    worker task per partition just to read a few dozen rows — ~0.2 s of CPU
+    each on a 4-vCPU host, mostly the worker's `importlib.invalidate_caches()`
+    re-reading the pyspark.zip directory once per zipimporter.
+
+    The rows cross to the JVM as one Arrow batch (a pyarrow Table converts
+    whatever the session's Arrow setting), and the schema is exactly the
+    DDL's: names, types and nullability. A SQL VALUES relation would also be
+    JVM-local, but makes every column non-nullable."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = [
+        pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow_schema), schema)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import EngineConfig, QueryPoint
+from spatialflink_spark.operators.knn import knn_merge
 from spatialflink_spark.operators.range_query import query_cells_df
 from spatialflink_spark.operators.cells import cell_expr
 
@@ -255,26 +256,10 @@ def stream_knn_topk(
 
 def finalize_knn(batch_df: DataFrame) -> DataFrame:
     """Batch-side final merge for stream_knn_topk output (already per-cell
-    top-k docs at min (dist, seq_no)): per-doc dedup keep min ACROSS cells
-    (KNNQuery.java:226-238), global rank, cut at k — identical math to
-    operators/knn.knn_windowed stage 2."""
-    from pyspark.sql.window import Window
-
-    per_doc = batch_df.groupBy("ws", "q_id", "k", "doc_id").agg(
-        F.min(F.struct("dist", "seq_no")).alias("_m")
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m.dist"), F.col("doc_id")
-    )
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "doc_id",
-            F.col("_m.seq_no").alias("seq_no"),
-            F.col("_m.dist").alias("dist"),
-        )
-    )
+    top-k docs at min (dist, seq_no)): operators/knn.knn_merge, the same
+    stage 2 the batch knn_windowed runs — per-doc dedup keep min ACROSS
+    cells (KNNQuery.java:226-238), global rank, cut at k, one exchange."""
+    return knn_merge(batch_df)
 
 
 # ---- streaming decontamination ---------------------------------------------

@@ -577,3 +577,99 @@ def test_prototypicality_assignment_is_broadcast_argmin(spark):
     p = plans.simple_plan(df)
     assert "CartesianProduct" not in p, p
     assert "SortMergeJoin" not in p, p
+
+
+def test_static_query_tables_plan_as_local_scans(spark, tmp_path):
+    """The tiny driver-side side tables (query cells, probe spans, cell
+    sets) are JVM-local relations: a LocalTableScan under the broadcast,
+    never a parallelized Python RDD (`Scan ExistingRDD`), whose Python
+    worker tasks would cost more than the pruning they feed."""
+    from spatialflink_spark.config import DEFAULT_QUERY_POINTS
+    from spatialflink_spark.gate import C
+    from spatialflink_spark.sources.streams import (
+        read_sequences_stream,
+        stage_replay_files,
+    )
+    from spatialflink_spark.streaming.pipeline import stream_knn_topk
+
+    stage_replay_files(spark, SF_SMALL, str(tmp_path), n_batches=2)
+    stream = read_sequences_stream(spark, str(tmp_path), C.allowed_lateness_s)
+    frames = {
+        name: getattr(gate, name)(spark, SF_SMALL)
+        for name in (
+            "q_range_tumbling_count",
+            "q_knn_sliding",
+            "q_range_prefix_counts",
+            "q_exclude_cells",
+            "q_include_cells",
+        )
+    }
+    frames["stream_knn_topk"] = stream_knn_topk(stream, C, DEFAULT_QUERY_POINTS)
+    for name, df in frames.items():
+        s = plans.simple_plan(df)
+        assert "LocalTableScan" in s, (name, s)
+        assert "ExistingRDD" not in s, (name, s)
+
+
+def test_local_table_matches_create_dataframe(spark):
+    """session.local_table keeps the DDL schema (names, types, nullability)
+    and the rows that spark.createDataFrame(<list>, ddl) gives — checked on
+    the query-cell table of the default queries plus a radius-0 query,
+    for which every cell is a candidate (UniformGrid.java:264-266)."""
+    from spatialflink_spark.config import DEFAULT_QUERY_POINTS, QueryPoint
+    from spatialflink_spark.gate import C
+    from spatialflink_spark.operators.range_query import query_cells_df
+    from spatialflink_spark.session import local_table
+
+    qs = DEFAULT_QUERY_POINTS + (QueryPoint("q_r0", 30, 0, 3),)
+    got = query_cells_df(spark, C.grid, qs)
+    ddl = "q_id string, q_n_tok int, radius int, k int, cell int, guaranteed boolean"
+    rows = [
+        (q.q_id, q.q_n_tok, q.radius, q.k, cell, guaranteed)
+        for q in qs
+        for guaranteed, cells in (
+            (True, C.grid.guaranteed_cells(q.q_n_tok, q.radius)),
+            (False, C.grid.candidate_cells(q.q_n_tok, q.radius)),
+        )
+        for cell in sorted(cells)
+    ]
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert all(f.nullable for f in got.schema.fields)
+    assert got.collect() == want.collect()
+    r0 = [r for r in got.collect() if r.q_id == "q_r0"]
+    assert sorted(r.cell for r in r0) == list(range(C.grid.num_cells))
+    # nulls, nested types and the empty table keep the DDL schema too
+    ddl2 = "a bigint, b array<float>, c string"
+    rows = [(1, [0.5, 1.25], None), (None, None, "x")]
+    t = local_table(spark, rows, ddl2)
+    assert t.schema == spark.createDataFrame(rows, ddl2).schema
+    assert [tuple(r) for r in t.collect()] == rows
+    assert local_table(spark, [], ddl2).schema == t.schema
+
+
+def test_knn_merge_single_exchange(spark):
+    """Stage 2 of the two-stage kNN (the streaming finalize_knn and the
+    batch knn_windowed share it) partitions once on (ws, q_id): the per-doc
+    groupBy and the rank window both reuse that exchange."""
+    from spatialflink_spark.session import local_table
+    from spatialflink_spark.streaming.pipeline import finalize_knn
+    from spatialflink_spark.streaming.stateful import KNN_OUT
+
+    cut = local_table(
+        spark,
+        [
+            (0, "q", 2, 1, 7, 0, 3),
+            (0, "q", 2, 2, 7, 1, 1),
+            (0, "q", 2, 2, 8, 0, 2),
+            (0, "q", 2, 3, 9, 0, 1),
+        ],
+        KNN_OUT,
+    )
+    df = finalize_knn(cut)
+    assert plans.exchange_count(df) == 1, plans.simple_plan(df)
+    # doc 7 keeps its min (dist, seq_no) across cells; ties break on doc_id
+    assert [tuple(r) for r in df.orderBy("rank").collect()] == [
+        (0, "q", 1, 7, 1, 1),
+        (0, "q", 2, 9, 0, 1),
+    ]
