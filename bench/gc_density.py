@@ -2,7 +2,7 @@
 
 The r4 sf1 spot showed geomcollection_join at ~48x its sf0.1 wall. That is
 OUTPUT-driven, not a plan defect: the synthetic event-time axis is a fixed
-600s span (sources/sequences.py:102), so a 10x corpus puts 10x rows into
+600s span (sources.sequences.derive_sequences), so a 10x corpus puts 10x rows into
 EVERY 60s tumbling window on both join sides — ~100x qualifying pairs. The
 mitigation a 100x-density user applies is to re-tune the density knobs:
 shorter windows (10x denser stream -> 1/10 the window keeps per-window

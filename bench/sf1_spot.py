@@ -1,7 +1,7 @@
 """sf1 spot check — 10x scale evidence for the most expensive gate queries.
 
 The driver ships fixtures up to sf0.1; a plan that's fine at 180k rows can
-hide quadratic candidate growth (exactly the failure mode bench.py:61-69
+hide quadratic candidate growth (exactly the failure mode bench.py's knn_unbounded note
 predicts for the no-prune kNN baseline). This script deterministically
 amplifies the sf0.1 fixture 10x and times the heavyweight queries at both
 scales, so BENCH.md can carry a measured "sf1 spot check" row.

@@ -141,10 +141,8 @@ def staytime_normalized(seq_t: DataFrame, grid: GridConfig) -> DataFrame:
     co-partitioned SMJ, no re-shuffle. Output: cell, ws, total_stay,
     n_sensor_ts, norm_stay."""
     from spatialflink_spark.config import DEFAULT_CONFIG as C
-    from spatialflink_spark.operators.intervals import (
-        _replicate_intervals,
-        interval_stream,
-    )
+    from spatialflink_spark.operators.geometry import replicate
+    from spatialflink_spark.operators.intervals import INTERVAL
 
     per_doc = with_cell(seq_t, grid).groupBy("doc_id", "cell", "ws").agg(
         (F.max("ts_s") - F.min("ts_s")).alias("stay")
@@ -153,7 +151,7 @@ def staytime_normalized(seq_t: DataFrame, grid: GridConfig) -> DataFrame:
         F.sum("stay").cast("bigint").alias("total_stay")
     )
     sensor = (
-        _replicate_intervals(interval_stream(seq_t), grid)
+        replicate(INTERVAL, seq_t, grid)
         .groupBy("cell", "ws")
         .agg(F.countDistinct("iv_ts").alias("n_sensor_ts"))
     )

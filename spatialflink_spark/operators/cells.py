@@ -28,12 +28,36 @@ from pyspark.sql import functions as F
 from spatialflink_spark.config import GridConfig
 
 
-def cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> Column:
-    """cell = clamp(floor(n_tok / cell_len), 0, num_cells-1) as INT."""
-    return F.expr(
-        f"cast(least(greatest(floor({n_tok_col} / {grid.cell_len}), 0), "
+def clamped_cell_sql(grid: GridConfig, x: str) -> str:
+    """SQL for the cell of value `x`: clamp(floor(x / cell_len), 0,
+    num_cells-1) as INT — out-of-domain values land in the edge cells."""
+    return (
+        f"cast(least(greatest(floor({x} / {grid.cell_len}), 0), "
         f"{grid.num_cells - 1}) as int)"
     )
+
+
+def cell_span_sql(grid: GridConfig, lo: str, hi: str, expand: int = 0) -> str:
+    """SQL array of the cells covering [lo - expand, hi + expand] — the
+    gridIDsSet of an extent (HelperClass.java:123-143); `expand` is the join
+    radius when one side is replicated to its neighbor cells
+    (JoinQuery.java:73-90)."""
+    if expand:
+        lo, hi = f"({lo} - {expand})", f"({hi} + {expand})"
+    return f"sequence({clamped_cell_sql(grid, lo)}, {clamped_cell_sql(grid, hi)})"
+
+
+def parts_cell_span_sql(grid: GridConfig, parts: str, expand: int = 0) -> str:
+    """SQL array of the cells covered by any element of `parts` (an array of
+    structs with lo/hi fields) — the union of the parts' gridIDsSets, as the
+    reference builds it for multi-geometries and collections."""
+    span = cell_span_sql(grid, "p.lo", "p.hi", expand)
+    return f"array_distinct(flatten(transform({parts}, p -> {span})))"
+
+
+def cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> Column:
+    """cell = clamp(floor(n_tok / cell_len), 0, num_cells-1) as INT."""
+    return F.expr(clamped_cell_sql(grid, n_tok_col))
 
 
 def duck_cell_expr(grid: GridConfig, n_tok_col: str = "n_tok") -> str:

@@ -30,7 +30,7 @@ distance (for 'ls' the vertices lie inside the bbox), so candidate
 generation via the union-of-parts covered cells loses nothing; the
 guaranteed-cell bypass is deliberately NOT used — a linestring part's bbox
 overlapping a guaranteed cell does not imply a VERTEX there (same reasoning
-as linestrings.py:34-37). The identical arithmetic is emitted as DuckDB SQL
+as for linestrings.LINESTRING). The identical arithmetic is emitted as DuckDB SQL
 (oracle/sql_apps.py) for bit-identical goldens.
 """
 
@@ -42,6 +42,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig, QueryPoint
+from spatialflink_spark.operators.cells import parts_cell_span_sql
+from spatialflink_spark.operators.geometry import (
+    GeomSpec,
+    geometry_knn,
+    geometry_range,
+    geometry_side,
+    latest_pair_join,
+    point_side,
+)
 
 GC_STRIDE = 23
 
@@ -93,18 +102,15 @@ def _gc_dist(q: str) -> str:
     )
 
 
-def _covered_cells_expr(grid: GridConfig, expand: int = 0) -> str:
-    """Union of the cells covered by each part's bbox, expanded by `expand`
-    for join replication — gridIDsSet over mixed parts."""
-    lo_c = (
-        f"cast(least(greatest(floor((p.lo - {expand}) / {grid.cell_len}), 0), "
-        f"{grid.num_cells - 1}) as int)"
-    )
-    hi_c = (
-        f"cast(least(greatest(floor((p.hi + {expand}) / {grid.cell_len}), 0), "
-        f"{grid.num_cells - 1}) as int)"
-    )
-    return f"array_distinct(flatten(transform(parts, p -> sequence({lo_c}, {hi_c}))))"
+# Covered cells = the union of the parts' bbox cells. No guaranteed-cell
+# bypass: 'ls' parts make it unsound (module docstring).
+GEOMCOLLECTION = GeomSpec(
+    prefix="gc",
+    stream=gc_stream,
+    cells=lambda grid, expand: parts_cell_span_sql(grid, "parts", expand),
+    dist=_gc_dist,
+    bypass=False,
+)
 
 
 def geomcollection_range(
@@ -112,113 +118,33 @@ def geomcollection_range(
 ) -> DataFrame:
     """Point-query range over the collection stream: candidates via the
     broadcast union-of-parts covered-cell equi-join, exact min-over-typed-
-    parts distance filter (no guaranteed-cell bypass — 'ls' parts make it
-    unsound). Output: ws, q_id, gc_id, gc_seq, dist."""
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    rep = gc_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid)))
-    )
-    hit = (
-        rep.join(F.broadcast(qcells), "cell")
-        .withColumn("dist", F.expr(_gc_dist("q_n_tok")))
-        .where(F.col("dist") <= F.col("radius"))
-    )
-    # a collection meets a query in >= 1 covered cell; collapse duplicates
-    return hit.groupBy("ws", "q_id", "gc_id", "gc_seq").agg(
-        F.min("dist").alias("dist")
-    )
+    parts distance filter. Output: ws, q_id, gc_id, gc_seq, dist."""
+    return geometry_range(GEOMCOLLECTION, seq_ws, grid, qs)
 
 
 def geomcollection_knn(
     seq_ws: DataFrame, grid: GridConfig, qs: Iterable[QueryPoint]
 ) -> DataFrame:
     """Point-query kNN over the collection stream — completes the mixed-part
-    combo row (range / join / kNN): same two-stage radius-bounded plan as
-    the other geometry kNNs — covered-cell broadcast candidates, exact
-    mixed-type distance, per-cell partial top-k after per-object
-    dedup-keep-min, bounded global merge (knn.py:35 shape).
+    combo row (range / join / kNN): covered-cell broadcast candidates, exact
+    mixed-type distance, then the shared two-stage top-k
+    (knn.two_stage_topk + knn.knn_merge).
     Output: ws, q_id, rank, gc_id, gc_seq, dist."""
-    from pyspark.sql.window import Window
-
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    rep = gc_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid)))
-    )
-    cand = (
-        rep.join(F.broadcast(qcells), "cell")
-        .withColumn("dist", F.expr(_gc_dist("q_n_tok")))
-        .where(F.col("dist") <= F.col("radius"))
-    )
-    per_obj = cand.repartition("ws", "q_id", "cell").groupBy("ws", "q_id", "k", "cell", "gc_id").agg(
-        F.min(F.struct("dist", "gc_seq")).alias("_m")
-    )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("gc_id")
-    )
-    partial = (
-        per_obj.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-    per_gc = partial.repartition("ws", "q_id").groupBy("ws", "q_id", "k", "gc_id").agg(
-        F.min("_m").alias("_m2")
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m2.dist"), F.col("gc_id")
-    )
-    return (
-        per_gc.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "gc_id",
-            F.col("_m2.gc_seq").alias("gc_seq"),
-            F.col("_m2.dist").alias("dist"),
-        )
-    )
+    return geometry_knn(GEOMCOLLECTION, seq_ws, grid, qs)
 
 
 def geomcollection_join(
     seq_ws: DataFrame, grid: GridConfig, radius: int
 ) -> DataFrame:
     """Windowed point-collection join: collections replicated to their
-    radius-EXPANDED union-of-parts cells, pure (ws, cell) equi-join against
-    the point stream, exact mixed-type distance θ-filter, id-skip,
+    radius-EXPANDED union-of-parts cells, (ws, cell) equi-join against the
+    point stream, exact mixed-type distance θ-filter, id-skip,
     latest-per-pair dedup (PointPointTJoinQuery.java:133-177 dedup shape).
     Output: ws, doc_id, gc_id, dist, pair_ts."""
-    from spatialflink_spark.operators.cells import with_cell
-
-    rep = gc_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid, expand=radius)))
-    )
-    pts = with_cell(seq_ws, grid).select(
-        "ws", "cell", "doc_id", "seq_no", "n_tok", "ts_s"
-    )
-    pairs = (
-        pts.join(rep, ["ws", "cell"])
-        .where(F.col("gc_id") != F.col("doc_id"))
-        .withColumn("dist", F.expr(_gc_dist("n_tok")))
-        .where(F.col("dist") <= radius)
-    )
-    latest = pairs.groupBy("ws", "doc_id", "gc_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("ts_s", "gc_ts").alias("pair_ts"),
-                F.col("seq_no"),
-                F.col("gc_seq"),
-                F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "doc_id",
-        "gc_id",
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+    return latest_pair_join(
+        point_side(seq_ws, grid),
+        geometry_side(GEOMCOLLECTION, seq_ws, grid, radius),
+        theta=f"dist <= {radius}",
+        out=("dist",),
+        dist=_gc_dist("n_tok"),
     )

@@ -23,7 +23,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig
-from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.operators.cells import cell_span_sql
+from spatialflink_spark.operators.geometry import (
+    GeomSpec,
+    Side,
+    geometry_knn,
+    geometry_side,
+    latest_pair_join,
+    point_side,
+    replicate,
+)
 
 LO_EXPR = "cast(greatest(n_tok - (doc_id % 5 + 1), 0) as int)"
 HI_EXPR = "cast(n_tok + (doc_id % 7 + 2) as int)"
@@ -42,105 +51,48 @@ def interval_stream(seq_ws: DataFrame) -> DataFrame:
     )
 
 
-def _replicate_intervals(iv: DataFrame, grid: GridConfig) -> DataFrame:
-    """Explode each interval to every cell it covers (Polygon.gridIDsSet
-    analog, HelperClass.java:123-143)."""
-    lo_c = f"cast(least(greatest(floor(lo / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor(hi / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    return iv.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})")))
+def bbox_dist(q: str) -> str:
+    """1-D point-to-bbox distance of [lo, hi] to point `q`
+    (DistanceFunctions.java:150-200 getPointPolygonBBoxMinEuclideanDistance)."""
+    return f"greatest(0, lo - {q}, {q} - hi)"
+
+
+# Covered cells = the span's cell range (Polygon.gridIDsSet analog). The
+# guaranteed-cell bypass is sound: an interval overlapping a guaranteed cell
+# contains a point within the radius, so its bbox distance <= radius.
+INTERVAL = GeomSpec(
+    prefix="iv",
+    stream=interval_stream,
+    cells=lambda grid, expand: cell_span_sql(grid, "lo", "hi", expand),
+    dist=bbox_dist,
+    bypass=True,
+)
 
 
 def interval_containment_join(seq_ws: DataFrame, grid: GridConfig) -> DataFrame:
     """Windowed point-in-interval join (PointPolygonJoinQuery shape,
     θ = containment): pairs (row, interval) in the same tumbling window with
     lo <= n_tok <= hi, deduped to one row per (ws, doc, iv) keeping the
-    latest (pair_ts, seqs) match — PointPointTJoinQuery.java:133-177.
+    latest (pair_ts, seqs) match — PointPointTJoinQuery.java:133-177. No
+    id-skip: a row may lie in its own interval.
 
     Output: ws, doc_id, iv_id, n_tok, lo, hi, pair_ts.
     """
-    iv = _replicate_intervals(interval_stream(seq_ws), grid)
-    pts = with_cell(seq_ws, grid).select(
-        "ws", "cell", "doc_id", "seq_no", "n_tok", "ts_s"
-    )
-    pairs = pts.join(iv, ["ws", "cell"]).where(
-        (F.col("n_tok") >= F.col("lo")) & (F.col("n_tok") <= F.col("hi"))
-    )
-    latest = pairs.groupBy("ws", "doc_id", "iv_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("ts_s", "iv_ts").alias("pair_ts"),
-                F.col("seq_no"),
-                F.col("iv_seq"),
-                F.col("n_tok"),
-                F.col("lo"),
-                F.col("hi"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "doc_id",
-        "iv_id",
-        F.col("_m.n_tok").alias("n_tok"),
-        F.col("_m.lo").alias("lo"),
-        F.col("_m.hi").alias("hi"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+    return latest_pair_join(
+        point_side(seq_ws, grid),
+        geometry_side(INTERVAL, seq_ws, grid),
+        theta="n_tok >= lo AND n_tok <= hi",
+        out=("n_tok", "lo", "hi"),
+        skip_self=False,
     )
 
 
 def interval_knn(seq_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     """Point-query kNN over the INTERVAL stream — the Point-Polygon kNN type
     combo (knn/PointPolygonKNNQuery.java): top-k intervals per (window,
-    query) by the 1-D point-to-bbox distance max(0, lo - q, q - hi)
-    (DistanceFunctions.java:150-200 getPointPolygonBBoxMinEuclideanDistance).
-
-    Same two-stage shape as knn.knn_windowed: radius-bounded candidates via
-    the replicated covered-cell broadcast equi-join (guaranteed-cell bypass
-    is sound for extended objects: an interval overlapping a guaranteed cell
-    contains a point within the radius, so its bbox distance <= radius),
-    per-cell partial top-k after per-interval dedup-keep-min, bounded global
-    merge. Output: ws, q_id, rank, iv_id, iv_seq, dist."""
-    from pyspark.sql.window import Window
-
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    iv = _replicate_intervals(interval_stream(seq_ws), grid)
-    dist = F.expr("greatest(0, lo - q_n_tok, q_n_tok - hi)")
-    cand = (
-        iv.join(F.broadcast(qcells), "cell")
-        .withColumn("dist", dist)
-        .where(F.col("guaranteed") | (F.col("dist") <= F.col("radius")))
-    )
-    # stage 1: per-cell dedup-keep-min per interval object, cut to k per cell
-    cell_iv_min = cand.repartition("ws", "q_id", "cell").groupBy("ws", "q_id", "k", "cell", "iv_id").agg(
-        F.min(F.struct("dist", "iv_seq")).alias("_m")
-    )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("iv_id")
-    )
-    partial = (
-        cell_iv_min.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-    # stage 2: bounded global merge (<= cells*k rows per (ws, q_id))
-    per_iv = partial.repartition("ws", "q_id").groupBy("ws", "q_id", "k", "iv_id").agg(
-        F.min("_m").alias("_m2")
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m2.dist"), F.col("iv_id")
-    )
-    return (
-        per_iv.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "iv_id",
-            F.col("_m2.iv_seq").alias("iv_seq"),
-            F.col("_m2.dist").alias("dist"),
-        )
-    )
+    query) by the 1-D point-to-bbox distance max(0, lo - q, q - hi).
+    Output: ws, q_id, rank, iv_id, iv_seq, dist."""
+    return geometry_knn(INTERVAL, seq_ws, grid, qs)
 
 
 def interval_interval_join(
@@ -155,58 +107,24 @@ def interval_interval_join(
 
     Replication: the LEFT stream is exploded to the cells covering its
     radius-EXPANDED span [lo-r, hi+r], the right to its plain covered cells
-    (JoinQuery.java:73-90 replicates one side by the neighboring-cell layer
-    the same way) — if dist <= radius the two clamped cell ranges overlap, so
-    every qualifying pair meets in >= 1 cell and the join is a pure
-    (ws, cell) equi-join. Output: ws, left_iv, right_iv, l_lo, l_hi, r_lo,
-    r_hi, dist, pair_ts."""
-    iv = interval_stream(seq_ws)
-    lo_c = f"cast(least(greatest(floor((lo - {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor((hi + {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    l = iv.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})"))).select(
-        "ws", "cell",
-        F.col("iv_id").alias("left_iv"), F.col("iv_seq").alias("l_seq"),
-        F.col("lo").alias("l_lo"), F.col("hi").alias("l_hi"),
-        F.col("iv_ts").alias("l_ts"),
-    )
-    r = _replicate_intervals(iv, grid).select(
-        F.col("ws").alias("r_ws"), F.col("cell").alias("r_cell"),
-        F.col("iv_id").alias("right_iv"), F.col("iv_seq").alias("r_seq"),
-        F.col("lo").alias("r_lo"), F.col("hi").alias("r_hi"),
-        F.col("iv_ts").alias("r_ts"),
-    )
-    dist = F.greatest(
-        F.lit(0), F.col("l_lo") - F.col("r_hi"), F.col("r_lo") - F.col("l_hi")
-    )
-    pairs = (
-        l.join(
-            r,
-            (l.ws == r.r_ws) & (l.cell == r.r_cell) & (l.left_iv != r.right_iv),
+    — if dist <= radius the two clamped cell ranges overlap, so every
+    qualifying pair meets in >= 1 cell. Output: ws, left_iv, right_iv, l_lo,
+    l_hi, r_lo, r_hi, dist, pair_ts."""
+
+    def side(expand: int, p: str, id_col: str) -> Side:
+        names = {"iv_id": id_col, "iv_seq": f"{p}_seq", "lo": f"{p}_lo",
+                 "hi": f"{p}_hi", "iv_ts": f"{p}_ts"}
+        rep = replicate(INTERVAL, seq_ws, grid, expand).select(
+            "ws", "cell", *[F.col(c).alias(a) for c, a in names.items()]
         )
-        .withColumn("dist", dist)
-        .where(F.col("dist") <= radius)
-    )
-    latest = pairs.groupBy("ws", "left_iv", "right_iv").agg(
-        F.max(
-            F.struct(
-                F.greatest("l_ts", "r_ts").alias("pair_ts"),
-                F.col("l_seq"), F.col("r_seq"),
-                F.col("l_lo"), F.col("l_hi"),
-                F.col("r_lo"), F.col("r_hi"),
-                F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "left_iv",
-        "right_iv",
-        F.col("_m.l_lo").alias("l_lo"),
-        F.col("_m.l_hi").alias("l_hi"),
-        F.col("_m.r_lo").alias("r_lo"),
-        F.col("_m.r_hi").alias("r_hi"),
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+        return Side(rep, id_col, f"{p}_seq", f"{p}_ts")
+
+    return latest_pair_join(
+        side(radius, "l", "left_iv"),
+        side(0, "r", "right_iv"),
+        theta=f"dist <= {radius}",
+        out=("l_lo", "l_hi", "r_lo", "r_hi", "dist"),
+        dist="greatest(0, l_lo - r_hi, r_lo - l_hi)",
     )
 
 

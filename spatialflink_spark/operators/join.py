@@ -24,16 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig
-from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.operators.cells import cell_span_sql, with_cell
 
 
 def _replicate_to_neighbor_cells(df: DataFrame, grid: GridConfig, radius: int) -> DataFrame:
     """Explode each row to every cell its radius-ball intersects — the
     query-stream replication of JoinQuery.java:73-90 (duplicate row per cell,
     then pure equi-join)."""
-    lo = f"cast(least(greatest(floor((n_tok - {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi = f"cast(least(greatest(floor((n_tok + {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    return df.withColumn("cell", F.explode(F.expr(f"sequence({lo}, {hi})")))
+    return df.withColumn(
+        "cell", F.explode(F.expr(cell_span_sql(grid, "n_tok", "n_tok", radius)))
+    )
 
 
 def windowed_join(

@@ -47,43 +47,56 @@ def knn_windowed(
     # PointPointKNNQuery.java:150-155). k > survivors => return-all
     # (README.md:161 semantics) falls out naturally.
     cand = range_query(seq_with_ws, grid, qs)
+    return knn_merge(two_stage_topk(cand, "doc_id", "seq_no"))
 
-    # stage 1: per-cell partial top-k. First dedup per doc WITHIN the cell
-    # (keep its min (dist, seq_no) row), THEN cut to the k best docs per cell.
-    # Deduping before the cut is what makes the two-stage result provably
-    # equal to global dedup-then-rank: a doc in the global top-k has fewer
-    # than k docs beating it in its own cell, so it survives the cut. (The
-    # reference cuts raw points per cell, KNNQuery.java:204-308 — a hot doc
-    # there can evict a qualifying doc; our oracle defines truth, SURVEY §7.)
-    # This is the map-side combine: the final stage input is bounded by
-    # num_cells * k rows per (ws, q_id) regardless of data volume.
-    # ONE exchange for stage 1 (guide §2.4 — operations keyed the same way
-    # share an exchange): hash-partitioning on (ws, q_id, cell) satisfies
-    # the clustering of BOTH the finer per-doc groupBy (its keys are a
-    # superset) and the per-cell rank window, so neither plans its own
-    # shuffle. The per-task slice stays one cell's candidates — the bounded
-    # sort the two-stage design promises at scale.
-    cell_doc_min = (
+
+def two_stage_topk(cand: DataFrame, id_col: str, seq_col: str) -> DataFrame:
+    """Stage 1 of the two-stage kNN, shared by knn_windowed and every
+    geometry kNN (operators/geometry.py): per-cell partial top-k.
+
+    `cand` holds radius-bounded candidates (ws, q_id, k, cell, <id_col>,
+    <seq_col>, dist, ...). First dedup per object WITHIN the cell (keep its
+    min (dist, seq) row), THEN cut to the k best objects per cell. Deduping
+    before the cut is what makes the two-stage result provably equal to
+    global dedup-then-rank: an object in the global top-k has fewer than k
+    objects beating it in its own cell, so it survives the cut. (The
+    reference cuts raw points per cell, KNNQuery.java:204-308 — a hot object
+    there can evict a qualifying one; our oracle defines truth, SURVEY §7.)
+    This is the map-side combine: knn_merge's input is bounded by
+    num_cells * k rows per (ws, q_id) regardless of data volume.
+
+    ONE exchange (guide §2.4 — operations keyed the same way share an
+    exchange): hash-partitioning on (ws, q_id, cell) satisfies the
+    clustering of BOTH the finer per-object groupBy (its keys are a
+    superset) and the per-cell rank window, so neither plans its own
+    shuffle. The per-task slice stays one cell's candidates.
+
+    Returns knn_merge's input (ws, q_id, k, doc_id, dist, seq_no): the
+    object id and seq columns are renamed to doc_id / seq_no."""
+    per_obj = (
         cand.repartition("ws", "q_id", "cell")
-        .groupBy("ws", "q_id", "k", "cell", "doc_id")
-        .agg(F.min(F.struct("dist", "seq_no")).alias("_m"))
+        .groupBy("ws", "q_id", "k", "cell", id_col)
+        .agg(F.min(F.struct("dist", seq_col)).alias("_m"))
     )
     w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("doc_id")
+        F.col("_m.dist"), F.col(id_col)
     )
-    partial = (
-        cell_doc_min.withColumn("_r", F.row_number().over(w_cell))
+    return (
+        per_obj.withColumn("_r", F.row_number().over(w_cell))
         .where(F.col("_r") <= F.col("k"))
-        .select("ws", "q_id", "k", "doc_id", "_m.dist", "_m.seq_no")
+        .select(
+            "ws", "q_id", "k",
+            F.col(id_col).alias("doc_id"),
+            F.col("_m.dist").alias("dist"),
+            F.col(f"_m.{seq_col}").alias("seq_no"),
+        )
     )
-
-    # stage 2: global merge per (ws, q_id), shared with the streaming merge
-    return knn_merge(partial)
 
 
 def knn_merge(cut: DataFrame) -> DataFrame:
-    """Stage 2 of the two-stage kNN, shared by the batch operator above and
-    the streaming pipeline's per-micro-batch merge (pipeline.finalize_knn):
+    """Stage 2 of the two-stage kNN, shared by the batch operators (after
+    two_stage_topk) and the streaming pipeline's per-micro-batch merge
+    (pipeline.finalize_knn):
     per-doc dedup keeping the min (dist, seq_no) ACROSS cells
     (KNNQuery.java:226-238), then re-rank per (ws, q_id) and cut to k.
 

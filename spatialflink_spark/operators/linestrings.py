@@ -45,11 +45,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig, QueryPoint
-
-# exact 1-D point-to-vertex-set distance over the token array; q is a column
-# or literal already in scope
-def _vertex_dist_expr(q: str) -> str:
-    return f"array_min(transform(tokens, t -> abs(t - {q})))"
+from spatialflink_spark.operators.cells import cell_span_sql
+from spatialflink_spark.operators.geometry import (
+    GeomSpec,
+    geometry_knn,
+    geometry_range,
+    geometry_side,
+    latest_pair_join,
+    point_side,
+)
+from spatialflink_spark.operators.intervals import INTERVAL, bbox_dist
 
 
 def linestring_stream(seq_ws: DataFrame) -> DataFrame:
@@ -66,10 +71,28 @@ def linestring_stream(seq_ws: DataFrame) -> DataFrame:
     )
 
 
-def _replicate_bbox(ls: DataFrame, grid: GridConfig, expand: int = 0) -> DataFrame:
-    lo_c = f"cast(least(greatest(floor((lo - {expand}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor((hi + {expand}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    return ls.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})")))
+def vertex_dist(q: str) -> str:
+    """Exact 1-D point-to-vertex-set distance over the token array; `q` is a
+    column or literal already in scope."""
+    return f"array_min(transform(tokens, t -> abs(t - {q})))"
+
+
+# Covered cells = the bbox's cell range; the bbox distance is the cheap
+# lower-bound prefilter. No guaranteed-cell bypass (see module docstring).
+LINESTRING = GeomSpec(
+    prefix="ls",
+    stream=linestring_stream,
+    cells=lambda grid, expand: cell_span_sql(grid, "lo", "hi", expand),
+    dist=vertex_dist,
+    bypass=False,
+    prefilter=bbox_dist,
+)
+
+
+# join-side columns: the linestring side leaves its bbox behind (the exact
+# distance reads the vertices)
+LS_COLS = ("ls_id", "ls_seq", "tokens", "ls_ts")
+IV_COLS = ("iv_id", "iv_seq", "lo", "hi", "iv_ts")
 
 
 def linestring_range(
@@ -79,65 +102,16 @@ def linestring_range(
     (range/PointLineStringRangeQuery.java shape): candidate linestrings via
     the broadcast covered-cell equi-join, bbox lower-bound prune, exact
     vertex-distance filter. Output: ws, q_id, ls_id, ls_seq, dist."""
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid)
-    cand = ls.join(F.broadcast(qcells), "cell").where(
-        F.expr("greatest(0, lo - q_n_tok, q_n_tok - hi)") <= F.col("radius")
-    )
-    exact = cand.withColumn("dist", F.expr(_vertex_dist_expr("q_n_tok")))
-    hit = exact.where(F.col("dist") <= F.col("radius"))
-    # a linestring meets a query in >= 1 covered cell; dedup to one row
-    return hit.groupBy("ws", "q_id", "ls_id", "ls_seq").agg(
-        F.min("dist").alias("dist")
-    )
+    return geometry_range(LINESTRING, seq_ws, grid, qs)
 
 
 def linestring_knn(
     seq_ws: DataFrame, grid: GridConfig, qs: Iterable[QueryPoint]
 ) -> DataFrame:
-    """Point-LineString kNN (knn/PointLineStringKNNQuery.java shape): same
-    two-stage radius-bounded plan as the point/interval kNN — bbox-pruned
-    candidates via broadcast covered cells, per-cell partial top-k after
-    per-object dedup-keep-min, bounded global merge. Output: ws, q_id, rank,
-    ls_id, ls_seq, dist."""
-    from pyspark.sql.window import Window
-
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid)
-    cand = ls.join(F.broadcast(qcells), "cell").where(
-        F.expr("greatest(0, lo - q_n_tok, q_n_tok - hi)") <= F.col("radius")
-    )
-    cand = cand.withColumn("dist", F.expr(_vertex_dist_expr("q_n_tok"))).where(
-        F.col("dist") <= F.col("radius")
-    )
-    per_obj = cand.repartition("ws", "q_id", "cell").groupBy("ws", "q_id", "k", "cell", "ls_id").agg(
-        F.min(F.struct("dist", "ls_seq")).alias("_m")
-    )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("ls_id")
-    )
-    partial = (
-        per_obj.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-    per_ls = partial.repartition("ws", "q_id").groupBy("ws", "q_id", "k", "ls_id").agg(F.min("_m").alias("_m2"))
-    w_final = Window.partitionBy("ws", "q_id").orderBy(F.col("_m2.dist"), F.col("ls_id"))
-    return (
-        per_ls.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "ls_id",
-            F.col("_m2.ls_seq").alias("ls_seq"),
-            F.col("_m2.dist").alias("dist"),
-        )
-    )
+    """Point-LineString kNN (knn/PointLineStringKNNQuery.java shape): the
+    bbox-pruned, vertex-verified candidates through the shared two-stage
+    top-k. Output: ws, q_id, rank, ls_id, ls_seq, dist."""
+    return geometry_knn(LINESTRING, seq_ws, grid, qs)
 
 
 def interval_linestring_join(
@@ -151,48 +125,13 @@ def interval_linestring_join(
     Replication: intervals to their radius-EXPANDED covered cells,
     linestrings to their bbox cells; a vertex within `radius` of [lo, hi]
     lies in [lo - radius, hi + radius], so every qualifying pair shares a
-    cell and the join is a pure (ws, cell) equi-join. Output: ws, iv_id,
-    ls_id, lo, hi, dist, pair_ts."""
-    from spatialflink_spark.operators.intervals import interval_stream
-
-    iv = interval_stream(seq_ws)
-    lo_c = f"cast(least(greatest(floor((lo - {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    hi_c = f"cast(least(greatest(floor((hi + {radius}) / {grid.cell_len}), 0), {grid.num_cells - 1}) as int)"
-    l = iv.withColumn("cell", F.explode(F.expr(f"sequence({lo_c}, {hi_c})"))).select(
-        "ws", "cell", "iv_id", "iv_seq", "lo", "hi", "iv_ts"
-    )
-    r = _replicate_bbox(linestring_stream(seq_ws), grid).select(
-        F.col("ws").alias("r_ws"), F.col("cell").alias("r_cell"),
-        "ls_id", "ls_seq", "tokens", "ls_ts",
-    )
-    pairs = (
-        l.join(
-            r,
-            (l.ws == r.r_ws) & (l.cell == r.r_cell) & (l.iv_id != r.ls_id),
-        )
-        .withColumn(
-            "dist",
-            F.expr("array_min(transform(tokens, t -> greatest(0, lo - t, t - hi)))"),
-        )
-        .where(F.col("dist") <= radius)
-    )
-    latest = pairs.groupBy("ws", "iv_id", "ls_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("iv_ts", "ls_ts").alias("pair_ts"),
-                F.col("iv_seq"), F.col("ls_seq"),
-                F.col("lo"), F.col("hi"), F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "iv_id",
-        "ls_id",
-        F.col("_m.lo").alias("lo"),
-        F.col("_m.hi").alias("hi"),
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+    cell. Output: ws, iv_id, ls_id, lo, hi, dist, pair_ts."""
+    return latest_pair_join(
+        geometry_side(INTERVAL, seq_ws, grid, radius, cols=IV_COLS),
+        geometry_side(LINESTRING, seq_ws, grid, cols=LS_COLS),
+        theta=f"dist <= {radius}",
+        out=("lo", "hi", "dist"),
+        dist=f"array_min(transform(tokens, t -> {bbox_dist('t')}))",
     )
 
 
@@ -201,35 +140,13 @@ def point_linestring_join(
 ) -> DataFrame:
     """Windowed point-linestring join (join/PointLineStringJoinQuery.java
     shape): the point stream replicated to its radius-neighborhood cells,
-    the linestring stream to its bbox cells (JoinQuery.java:73-90), pure
-    (ws, cell) equi-join, exact vertex-distance θ-filter, latest-per-pair
-    dedup with id-skip. Output: ws, doc_id, ls_id, dist, pair_ts."""
-    from spatialflink_spark.operators.join import _replicate_to_neighbor_cells
-
-    pts = _replicate_to_neighbor_cells(seq_ws, grid, radius).select(
-        "ws", "cell", "doc_id", "seq_no", "n_tok", "ts_s"
-    )
-    ls = _replicate_bbox(linestring_stream(seq_ws), grid).select(
-        F.col("ws").alias("l_ws"), F.col("cell").alias("l_cell"),
-        "ls_id", "ls_seq", "tokens", F.col("ls_ts"),
-    )
-    pairs = pts.join(
-        ls,
-        (pts.ws == ls.l_ws) & (pts.cell == ls.l_cell) & (pts.doc_id != ls.ls_id),
-    ).withColumn("dist", F.expr(_vertex_dist_expr("n_tok")))
-    pairs = pairs.where(F.col("dist") <= radius)
-    latest = pairs.groupBy("ws", "doc_id", "ls_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("ts_s", "ls_ts").alias("pair_ts"),
-                F.col("seq_no"), F.col("ls_seq"), F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "doc_id",
-        "ls_id",
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+    the linestring stream to its bbox cells (JoinQuery.java:73-90), exact
+    vertex-distance θ-filter, latest-per-pair dedup with id-skip.
+    Output: ws, doc_id, ls_id, dist, pair_ts."""
+    return latest_pair_join(
+        point_side(seq_ws, grid, radius),
+        geometry_side(LINESTRING, seq_ws, grid, cols=LS_COLS),
+        theta=f"dist <= {radius}",
+        out=("dist",),
+        dist=vertex_dist("n_tok"),
     )

@@ -29,7 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import GridConfig
-from spatialflink_spark.operators.cells import with_cell
+from spatialflink_spark.operators.cells import parts_cell_span_sql
+from spatialflink_spark.operators.geometry import (
+    GeomSpec,
+    geometry_knn,
+    geometry_range,
+    geometry_side,
+    latest_pair_join,
+    point_side,
+)
 
 SPAN_STRIDE = 17
 
@@ -53,54 +61,32 @@ def mi_stream(seq_ws: DataFrame) -> DataFrame:
     )
 
 
-def _covered_cells_expr(grid: GridConfig, expand: int = 0) -> str:
-    """UNION of the cells covered by each span (expanded by `expand` on both
-    sides for join replication) — Polygon.gridIDsSet over parts
-    (HelperClass.java:123-143 applied per part, then unioned)."""
-    lo_c = (
-        f"cast(least(greatest(floor((s.lo - {expand}) / {grid.cell_len}), 0), "
-        f"{grid.num_cells - 1}) as int)"
-    )
-    hi_c = (
-        f"cast(least(greatest(floor((s.hi + {expand}) / {grid.cell_len}), 0), "
-        f"{grid.num_cells - 1}) as int)"
-    )
-    return f"array_distinct(flatten(transform(spans, s -> sequence({lo_c}, {hi_c}))))"
-
-
 def _mi_dist(p: str) -> str:
     """min-over-parts 1-D bbox distance of a spans array to point `p`."""
     return f"array_min(transform(spans, s -> greatest(0, s.lo - {p}, {p} - s.hi)))"
+
+
+# Covered cells = the union of the spans' cells (Polygon.gridIDsSet over
+# parts). Grid pruning via the union-of-parts covered cells: if dist <= r, some span
+# intersects [q-r, q+r], so one of its covered cells is a candidate or
+# guaranteed cell. The guaranteed-cell bypass is sound for the same reason
+# as for intervals: a part overlapping a guaranteed cell has a point within
+# the radius.
+MULTIINTERVAL = GeomSpec(
+    prefix="mi",
+    stream=mi_stream,
+    cells=lambda grid, expand: parts_cell_span_sql(grid, "spans", expand),
+    dist=_mi_dist,
+    bypass=True,
+)
 
 
 def multiinterval_range(seq_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     """Point-query range over the MULTI-INTERVAL stream — the multi-geometry
     range combo (PointMultiPolygonRangeQuery shape): objects whose
     min-over-parts distance to the query point is <= radius.
-
-    Grid pruning via the union-of-parts covered cells: if dist <= r, some
-    span intersects [q-r, q+r], so one of its covered cells is a candidate
-    or guaranteed cell — the broadcast equi-join on cell loses nothing. The
-    guaranteed-cell bypass is sound for multi objects for the same reason as
-    intervals: a part overlapping a guaranteed cell has a point within the
-    radius. Output: ws, q_id, mi_id, mi_seq, dist."""
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    rep = mi_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid)))
-    )
-    scored = (
-        rep.join(F.broadcast(qcells), "cell")
-        .withColumn("dist", F.expr(_mi_dist("q_n_tok")))
-        .where(F.col("guaranteed") | (F.col("dist") <= F.col("radius")))
-    )
-    # an object meets a query in >= 1 covered cell; every copy carries the
-    # same object-level dist — collapse to one row per (window, query, object)
-    return scored.groupBy("ws", "q_id", "mi_id", "mi_seq").agg(
-        F.min("dist").alias("dist")
-    )
+    Output: ws, q_id, mi_id, mi_seq, dist."""
+    return geometry_range(MULTIINTERVAL, seq_ws, grid, qs)
 
 
 def multiinterval_join(seq_ws: DataFrame, grid: GridConfig, radius: int) -> DataFrame:
@@ -113,36 +99,13 @@ def multiinterval_join(seq_ws: DataFrame, grid: GridConfig, radius: int) -> Data
     EXPANDED by the radius (JoinQuery.java:73-90 replicates one side by the
     neighboring layer the same way) — if dist <= radius the point's cell is
     inside some expanded span's cell range, so every qualifying pair meets in
-    >= 1 cell and the join is a pure (ws, cell) equi-join. Output: ws,
-    doc_id, mi_id, dist, pair_ts."""
-    rep = mi_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid, expand=radius)))
-    )
-    pts = with_cell(seq_ws, grid).select(
-        "ws", "cell", "doc_id", "seq_no", "n_tok", "ts_s"
-    )
-    pairs = (
-        pts.join(rep, ["ws", "cell"])
-        .where(F.col("mi_id") != F.col("doc_id"))
-        .withColumn("dist", F.expr(_mi_dist("n_tok")))
-        .where(F.col("dist") <= radius)
-    )
-    latest = pairs.groupBy("ws", "doc_id", "mi_id").agg(
-        F.max(
-            F.struct(
-                F.greatest("ts_s", "mi_ts").alias("pair_ts"),
-                F.col("seq_no"),
-                F.col("mi_seq"),
-                F.col("dist"),
-            )
-        ).alias("_m")
-    )
-    return latest.select(
-        "ws",
-        "doc_id",
-        "mi_id",
-        F.col("_m.dist").alias("dist"),
-        F.col("_m.pair_ts").alias("pair_ts"),
+    >= 1 cell. Output: ws, doc_id, mi_id, dist, pair_ts."""
+    return latest_pair_join(
+        point_side(seq_ws, grid),
+        geometry_side(MULTIINTERVAL, seq_ws, grid, radius),
+        theta=f"dist <= {radius}",
+        out=("dist",),
+        dist=_mi_dist("n_tok"),
     )
 
 
@@ -150,50 +113,6 @@ def multiinterval_knn(seq_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     """Point-query kNN over the MULTI-INTERVAL stream — the Point-
     MultiPolygon kNN combo (knn/PointPolygonKNNQuery applied per part,
     min over parts): top-k multi objects per (window, query) by the
-    min-over-parts 1-D bbox distance.
-
-    Same two-stage shape as knn.knn_windowed: radius-bounded candidates via
-    the union-of-parts covered-cell broadcast equi-join (guaranteed-cell
-    bypass sound — a part overlapping a guaranteed cell has a point within
-    the radius), per-cell partial top-k after per-object dedup-keep-min,
-    bounded global merge. Output: ws, q_id, rank, mi_id, mi_seq, dist."""
-    from pyspark.sql.window import Window
-
-    from spatialflink_spark.operators.range_query import query_cells_df
-
-    spark = seq_ws.sparkSession
-    qcells = query_cells_df(spark, grid, qs)
-    rep = mi_stream(seq_ws).withColumn(
-        "cell", F.explode(F.expr(_covered_cells_expr(grid)))
-    )
-    cand = (
-        rep.join(F.broadcast(qcells), "cell")
-        .withColumn("dist", F.expr(_mi_dist("q_n_tok")))
-        .where(F.col("guaranteed") | (F.col("dist") <= F.col("radius")))
-    )
-    cell_mi_min = cand.repartition("ws", "q_id", "cell").groupBy("ws", "q_id", "k", "cell", "mi_id").agg(
-        F.min(F.struct("dist", "mi_seq")).alias("_m")
-    )
-    w_cell = Window.partitionBy("ws", "q_id", "cell").orderBy(
-        F.col("_m.dist"), F.col("mi_id")
-    )
-    partial = (
-        cell_mi_min.withColumn("_r", F.row_number().over(w_cell))
-        .where(F.col("_r") <= F.col("k"))
-        .drop("_r")
-    )
-    per_mi = partial.repartition("ws", "q_id").groupBy("ws", "q_id", "k", "mi_id").agg(
-        F.min("_m").alias("_m2")
-    )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m2.dist"), F.col("mi_id")
-    )
-    return (
-        per_mi.withColumn("rank", F.row_number().over(w_final).cast("int"))
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "ws", "q_id", "rank", "mi_id",
-            F.col("_m2.mi_seq").alias("mi_seq"),
-            F.col("_m2.dist").alias("dist"),
-        )
-    )
+    min-over-parts 1-D bbox distance, through the shared two-stage top-k.
+    Output: ws, q_id, rank, mi_id, mi_seq, dist."""
+    return geometry_knn(MULTIINTERVAL, seq_ws, grid, qs)

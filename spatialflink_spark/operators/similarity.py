@@ -92,7 +92,7 @@ def _topk_ranked(scored: DataFrame, k: int) -> DataFrame:
     window that follows runs over <= k rows (single task, bounded by k —
     fine at any scale). This replaces the round-3 un-partitioned
     row_number() window, which sorted EVERY scored row in one task — the
-    same windowAll anti-pattern the grid kNN avoids (knn.py:9-16)."""
+    same windowAll anti-pattern the grid kNN avoids (knn.knn_merge)."""
     top = scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(k)
     return (
         top.withColumn(
@@ -687,7 +687,7 @@ def search_ivf_index(
 # Query-TABLE batch top-k — the op an LLM retrieval/dedup pipeline actually
 # runs: top-k per query over a query SET, mirroring the reference's kNN which
 # takes a query set (knn/KNNQuery.java:49; the grid engine's own
-# query_cells_df, range_query.py:32), applied to embeddings.
+# range_query.query_cells_df), applied to embeddings.
 # ---------------------------------------------------------------------------
 
 QUERY_MOD = 41  # deterministic query table: every 41st vec_id
@@ -701,35 +701,40 @@ def query_table(emb: DataFrame, query_mod: int = QUERY_MOD) -> DataFrame:
     )
 
 
-def _batch_topk_two_stage(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query two-stage top-k over (q_id, vec_id, label, bucket, cos_sim).
+def _batch_topk_two_stage(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos_sim",
+    desc: bool = True,
+    payload: tuple[str, ...] = ("label",),
+) -> DataFrame:
+    """Per-query two-stage top-k over (q_id, vec_id, bucket, *payload,
+    score), ranked by (score in `desc` order, vec_id asc).
 
     Stage 1 cuts to the k best per (q_id, bucket) — the map-side combine:
     each window task sorts only one bucket's candidates for one query, never
     a whole query's candidate set. Stage 2 ranks the <= buckets * k
     survivors per query. Answer-identical to a direct per-query rank: a row
     in the global top-k has < k rows beating it overall (by the total order
-    (cos_sim desc, vec_id asc)), hence < k in its own bucket, so it survives
-    the stage-1 cut — same argument as the grid kNN's per-cell cut
-    (knn.py:50-69), without the dedup step because each (q_id, vec_id) pair
-    occurs exactly once."""
+    (score, vec_id asc)), hence < k in its own bucket, so it survives the
+    stage-1 cut — same argument as the grid kNN's per-cell cut
+    (knn.two_stage_topk), without the dedup step because each
+    (q_id, vec_id) pair occurs exactly once.
+    Output: q_id, rank, vec_id, *payload, score."""
     from pyspark.sql.window import Window
 
-    w1 = Window.partitionBy("q_id", "bucket").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
+    order = (F.col(score).desc() if desc else F.col(score).asc(), F.col("vec_id").asc())
+    w1 = Window.partitionBy("q_id", "bucket").orderBy(*order)
     partial = (
         scored.withColumn("_r", F.row_number().over(w1))
         .where(F.col("_r") <= k)
         .drop("_r", "bucket")
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
+    w2 = Window.partitionBy("q_id").orderBy(*order)
     return (
         partial.withColumn("rank", F.row_number().over(w2).cast("int"))
         .where(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "label", "cos_sim")
+        .select("q_id", "rank", "vec_id", *payload, score)
     )
 
 
@@ -1276,8 +1281,6 @@ def pq_topk_batch(
     (any bucketing is answer-invisible — the _batch_topk_two_stage proof).
     Everything after quantization is exact bigint. Output: q_id, rank,
     vec_id, adc."""
-    from pyspark.sql.window import Window
-
     from spatialflink_spark.session import spread
 
     d = len(emb.select("embedding").first()["embedding"])
@@ -1316,22 +1319,7 @@ def pq_topk_batch(
             f"s + element_at(dt, j * {n_cent} + element_at(codes, j + 1) + 1))"
         ).alias("adc"),
     )
-    w1 = Window.partitionBy("q_id", "bucket").orderBy(
-        F.col("adc").asc(), F.col("vec_id").asc()
-    )
-    partial = (
-        scored.withColumn("_r", F.row_number().over(w1))
-        .where(F.col("_r") <= k)
-        .drop("_r", "bucket")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("adc").asc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "adc")
-    )
+    return _batch_topk_two_stage(scored, k, "adc", desc=False, payload=())
 
 
 def l2_topk_batch(
@@ -1343,8 +1331,6 @@ def l2_topk_batch(
     cut as cosine_topk_batch (bucket = vec_id mod 16: any deterministic
     bucketing is answer-invisible). Exact bigint distances end-to-end.
     Output: q_id, rank, vec_id, d2."""
-    from pyspark.sql.window import Window
-
     from spatialflink_spark.session import spread
 
     base = spread(emb).select(
@@ -1362,22 +1348,7 @@ def l2_topk_batch(
             " cast(0 as bigint), (s, v) -> s + v)"
         ).alias("d2"),
     )
-    w1 = Window.partitionBy("q_id", "bucket").orderBy(
-        F.col("d2").asc(), F.col("vec_id").asc()
-    )
-    partial = (
-        scored.withColumn("_r", F.row_number().over(w1))
-        .where(F.col("_r") <= k)
-        .drop("_r", "bucket")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("d2").asc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "d2")
-    )
+    return _batch_topk_two_stage(scored, k, "d2", desc=False, payload=())
 
 
 def pq_batch_recall(

@@ -9,6 +9,7 @@ and by bench-time diagnostics:
 - has_broadcast_join(df): small side broadcast, not shuffled
 - has_partial_aggregate(df): map-side combine before the exchange
 - exchange_count(df): number of shuffles in the plan
+- plan_skeleton(df): the operator tree alone, comparable across plans
 """
 
 from __future__ import annotations
@@ -30,6 +31,17 @@ def _explain(df: DataFrame, mode: str) -> str:
 
 def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
+
+
+def plan_skeleton(df: DataFrame) -> str:
+    """The formatted plan's node tree — one line per operator, nesting kept —
+    with the (N) node numbers and #ids stripped, so two plans compare equal
+    exactly when they run the same operators in the same shape (expression
+    details and attribute ids aside)."""
+    tree = formatted_plan(df).split("\n\n", 1)[0]
+    return "\n".join(
+        re.sub(r" \(\d+\)|#\d+L?", "", line).rstrip() for line in tree.splitlines()
+    )
 
 
 def simple_plan(df: DataFrame) -> str:

@@ -94,6 +94,51 @@ def test_knn_pruned_equals_naive(spark):
     assert a.equals(b[a.columns])
 
 
+def test_two_stage_topk_matches_brute_force(spark):
+    """The shared kNN kernel (knn.two_stage_topk, then knn.knn_merge)
+    against a pure-Python brute force: dedup each object to its min
+    (dist, seq), rank globally by (dist, id), cut to k. 240 seeded random
+    small cases, each its own window `ws` so the whole check is one
+    collect. Adversarial ties on purpose: cases whose dists all tie, one
+    object spread over several cells with different (dist, seq), repeated
+    rows of an object within one cell, k = 1 and k above the number of
+    surviving objects."""
+    import random
+
+    from spatialflink_spark.operators.knn import knn_merge, two_stage_topk
+    from spatialflink_spark.session import local_table
+
+    rng = random.Random(6101)
+    rows, want = [], []
+    for case in range(240):
+        for q_id in ("a", "b")[: rng.randint(1, 2)]:
+            n_obj, n_cells = rng.randint(1, 6), rng.randint(1, 4)
+            dmax = 0 if case % 6 == 0 else rng.choice((1, 2, 5))
+            k = (1, n_obj + rng.randint(1, 3), rng.randint(1, n_obj))[case % 3]
+            objs = rng.sample(range(30), n_obj)
+            best = {}
+            for i, obj in enumerate(objs):
+                # object 0 of every 5th case sits in every cell
+                spread_all = case % 5 == 0 and i == 0
+                cells = range(n_cells) if spread_all else [None] * rng.randint(1, 4)
+                for cell in cells:
+                    cell = rng.randrange(n_cells) if cell is None else cell
+                    dist, seq = rng.randint(0, dmax), rng.randint(0, 3)
+                    rows.append((case, q_id, k, cell, obj, seq, dist))
+                    best[obj] = min(best.get(obj, (dist, seq)), (dist, seq))
+            ranked = sorted(best.items(), key=lambda o: (o[1][0], o[0]))[:k]
+            want += [
+                (case, q_id, rank, obj, seq, dist)
+                for rank, (obj, (dist, seq)) in enumerate(ranked, 1)
+            ]
+    cand = local_table(
+        spark, rows,
+        "ws bigint, q_id string, k int, cell int, obj bigint, oseq int, dist int",
+    )
+    got = knn_merge(two_stage_topk(cand, "obj", "oseq")).collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+
+
 def test_blocked_dup_pairs_contained_in_all_pairs(spark):
     """embedding_dup_pairs_blocked ⊆ embedding_dup_pairs with identical
     cos_sim per found pair, and recall >= 0.9 on the fixture's weak

@@ -6,6 +6,7 @@ pushdown, a broadcast that became a shuffle, a final agg without its partial.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spatialflink_spark import gate, plans
@@ -62,27 +63,6 @@ def test_join_replication_stays_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in s
 
 
-def test_interval_interval_join_stays_equi_join(spark):
-    """Polygon-Polygon combo: radius-expanded cell replication must keep the
-    join a (ws, cell) equi-join — no cartesian/nested-loop fallback."""
-    df = gate.q_interval_interval_join(spark, SF_SMALL)
-    s = plans.simple_plan(df)
-    assert "CartesianProduct" not in s
-    assert "BroadcastNestedLoopJoin" not in s
-
-
-def test_point_linestring_join_stays_equi_join(spark):
-    df = gate.q_point_linestring_join(spark, SF_SMALL)
-    s = plans.simple_plan(df)
-    assert "CartesianProduct" not in s
-    assert "BroadcastNestedLoopJoin" not in s
-
-
-def test_linestring_range_broadcasts_query_cells(spark):
-    df = gate.q_linestring_range(spark, SF_SMALL)
-    assert plans.has_broadcast_join(df), plans.simple_plan(df)
-
-
 def test_simhash_dup_pairs_is_bucketed(spark):
     """The banded SimHash join must be a (band_id, band_key) equi-join —
     candidate generation never leaves its buckets."""
@@ -126,23 +106,6 @@ def test_spread_parallelizes_single_partition_scan(spark):
     assert s.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     again = spread(s)
     assert again is s  # no extra shuffle when already spread
-
-
-def test_multiinterval_range_broadcasts_query_cells(spark):
-    """Multi-geometry range: union-of-parts replication joins the tiny
-    (query, cell) table by BROADCAST — the data stream never shuffles for
-    the filter stage."""
-    df = gate.q_multiinterval_range(spark, SF_SMALL)
-    assert plans.has_broadcast_join(df), plans.simple_plan(df)
-
-
-def test_multiinterval_join_stays_equi_join(spark):
-    """Point-MultiPolygon combo: radius-expanded union-of-parts replication
-    must keep the join a (ws, cell) equi-join — no cartesian fallback."""
-    df = gate.q_multiinterval_join(spark, SF_SMALL)
-    s = plans.simple_plan(df)
-    assert "CartesianProduct" not in s
-    assert "BroadcastNestedLoopJoin" not in s
 
 
 def test_knn_unbounded_pruned_no_cartesian(spark):
@@ -272,22 +235,6 @@ def test_pack_emit_straddle_hand_computed(spark):
     # bin 1: seq2's last 3 tokens (pos 0..2), seq3 fully (pos 3..5)
     assert got[("a", 1)] == (2, 6, chk([(0, list(range(26, 29))), (3, list(range(30, 33)))]))
     assert set(got) == {("a", 0), ("a", 1)}
-
-
-def test_geomcollection_range_broadcasts_query_cells(spark):
-    """Mixed-part collection range: union-of-typed-parts cell replication
-    joins the tiny query-cell table by BROADCAST."""
-    df = gate.q_geomcollection_range(spark, SF_SMALL)
-    assert plans.has_broadcast_join(df), plans.simple_plan(df)
-
-
-def test_geomcollection_join_stays_equi_join(spark):
-    """Point-collection combo: radius-expanded mixed-part replication must
-    keep the join a (ws, cell) equi-join — no cartesian fallback."""
-    df = gate.q_geomcollection_join(spark, SF_SMALL)
-    s = plans.simple_plan(df)
-    assert "CartesianProduct" not in s
-    assert "BroadcastNestedLoopJoin" not in s
 
 
 def test_pack_emit_randomized_vs_python_reference(spark):
@@ -673,3 +620,73 @@ def test_knn_merge_single_exchange(spark):
         (0, "q", 1, 7, 1, 1),
         (0, "q", 2, 9, 0, 1),
     ]
+
+
+# every geometry operator gate.py calls, by plan family; each family shares
+# one plan skeleton with its reference operator (the first of its tuple)
+GEOMETRY_FAMILIES = {
+    "range": (
+        "linestring_range", "multiinterval_range", "geomcollection_range",
+    ),
+    "knn": (
+        "knn_sliding", "interval_knn", "linestring_knn", "multiinterval_knn",
+        "geomcollection_knn",
+    ),
+    "join": (
+        "join_self_tumbling", "interval_containment_join",
+        "interval_interval_join", "point_linestring_join",
+        "interval_linestring_join", "multiinterval_join", "geomcollection_join",
+    ),
+    "count": ("interval_range_count",),
+}
+GEOMETRY_OPS = [
+    (family, name)
+    for family, names in GEOMETRY_FAMILIES.items()
+    for name in names
+    if name not in ("knn_sliding", "join_self_tumbling")
+]
+
+
+def _above_join(skeleton: str) -> list[str]:
+    """Skeleton lines from the root down to (not including) the first join."""
+    lines = skeleton.splitlines()
+    return lines[: next(i for i, line in enumerate(lines) if "Join" in line)]
+
+
+@pytest.mark.parametrize(
+    "family,name", GEOMETRY_OPS, ids=[name for _, name in GEOMETRY_OPS]
+)
+def test_geometry_operator_plan(spark, family, name):
+    """Every geometry operator comes from one of three builders
+    (operators/geometry.py), so each family plans one shape:
+
+    - no operator falls back to a cartesian or nested-loop join; the
+      replicated sides always meet in a (ws, cell) equi-join
+    - ranges and kNNs join the tiny (query, cell) table by BROADCAST, so the
+      data stream never shuffles for the filter stage
+    - the ranges share one skeleton
+    - every kNN, knn_sliding included, shares one skeleton above its
+      candidate join (two_stage_topk + knn_merge), with exactly the two
+      hash exchanges of the two stages
+    - every latest-per-pair join shares join_self_tumbling's skeleton above
+      the join
+    """
+    df = getattr(gate, f"q_{name}")(spark, SF_SMALL)
+    s = plans.simple_plan(df)
+    assert "CartesianProduct" not in s, s
+    assert "BroadcastNestedLoopJoin" not in s, s
+    if family == "count":
+        return
+    if family in ("range", "knn"):
+        assert plans.has_broadcast_join(df), s
+    ref = GEOMETRY_FAMILIES[family][0]
+    skel = plans.plan_skeleton(df)
+    ref_skel = plans.plan_skeleton(getattr(gate, f"q_{ref}")(spark, SF_SMALL))
+    if family == "range":
+        assert skel == ref_skel, (skel, ref_skel)
+        return
+    above = _above_join(skel)
+    assert above == _above_join(ref_skel), (skel, ref_skel)
+    if family == "knn":
+        assert [line.strip() for line in above].count("+- Exchange") == 2, skel
+        assert s.count("Exchange hashpartitioning") >= 2, s
