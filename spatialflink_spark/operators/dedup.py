@@ -151,53 +151,69 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Candidate pairs sharing at least one LSH band, verified by exact
-    Jaccard over shingle-hash sets, filtered to >= threshold.
+def _band_candidates(
+    sig: DataFrame, bands: int, band_key: str, payload: dict[str, str]
+) -> DataFrame:
+    """THE banded candidate join shared by MinHash-LSH and both SimHash
+    widths: explode each doc of the signature table `sig` to its `bands`
+    (band_id, band_key) buckets (`band_key` is SQL over band_id and the
+    signature columns), self equi-join per bucket with left_doc <
+    right_doc, keep each pair once. `payload` maps a signature column to
+    its pair-column suffix: output is left_doc, right_doc, then l_<s>,
+    r_<s> per payload entry, for the caller's exact verify.
 
-    Output: left_doc, right_doc, est_sim (matching minhash fraction),
-    jaccard — all rounded for portability."""
-    # persist: the signature table feeds BOTH join sides; without it the
-    # whole tokenize->shingle->minhash pipeline runs twice. At cluster scale
-    # this is a write-once intermediate table (or .checkpoint()). The small
-    # candidate set is localCheckpointed below so sigs can be unpersisted
-    # here instead of leaking into the caller's session.
-    sigs = minhash_signatures(docs).persist()
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        "_hs",
-        F.explode(F.expr(f"sequence(0, {N_BANDS - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_key",
-        F.expr(
-            f"concat_ws(',', slice(sig, band_id * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}))"
-        ),
-    )
-    l = bands.select(
-        F.col("band_id"), F.col("band_key"),
-        F.col("doc_id").alias("left_doc"), F.col("sig").alias("l_sig"),
-        F.col("_hs").alias("l_hs"),
-    )
-    r = bands.select(
-        F.col("band_id").alias("band_id_r"), F.col("band_key").alias("band_key_r"),
-        F.col("doc_id").alias("right_doc"), F.col("sig").alias("r_sig"),
-        F.col("_hs").alias("r_hs"),
-    )
+    `sig` is persisted here because it feeds BOTH join sides (without it
+    the whole signature pipeline runs twice; at cluster scale it is a
+    write-once intermediate table). The candidate set is small, so it is
+    localCheckpointed EAGERLY — that materializes the join — and `sig` is
+    unpersisted before returning instead of leaking into the caller's
+    session (library callers don't clearCache)."""
+    sig = sig.persist()
     try:
-        cand = (
+        banded = sig.select(
+            "doc_id",
+            *payload,
+            F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id"),
+        ).withColumn("band_key", F.expr(band_key))
+        l = banded.select(
+            "band_id", "band_key", F.col("doc_id").alias("left_doc"),
+            *(F.col(c).alias(f"l_{x}") for c, x in payload.items()),
+        )
+        r = banded.select(
+            F.col("band_id").alias("band_id_r"), F.col("band_key").alias("band_key_r"),
+            F.col("doc_id").alias("right_doc"),
+            *(F.col(c).alias(f"r_{x}") for c, x in payload.items()),
+        )
+        return (
             l.join(
                 r,
                 (l.band_id == r.band_id_r)
                 & (l.band_key == r.band_key_r)
                 & (l.left_doc < r.right_doc),
             )
-            .select("left_doc", "right_doc", "l_sig", "r_sig", "l_hs", "r_hs")
+            .select(
+                "left_doc", "right_doc",
+                *(f"{side}_{x}" for x in payload.values() for side in "lr"),
+            )
             .dropDuplicates(["left_doc", "right_doc"])
             .localCheckpoint()
         )
     finally:
-        sigs.unpersist()
+        sig.unpersist()
+
+
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Candidate pairs sharing at least one LSH band, verified by exact
+    Jaccard over shingle-hash sets, filtered to >= threshold.
+
+    Output: left_doc, right_doc, est_sim (matching minhash fraction),
+    jaccard — all rounded for portability."""
+    cand = _band_candidates(
+        minhash_signatures(docs),
+        N_BANDS,
+        f"concat_ws(',', slice(sig, band_id * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}))",
+        {"sig": "sig", "_hs": "hs"},
+    )
     return cand.select(
         "left_doc",
         "right_doc",
@@ -261,47 +277,7 @@ def simhash_dup_pairs(
     is EXACTLY the all-pairs result (pigeonhole), so the DuckDB oracle is the
     plain O(n²) hamming join at test scale while the engine never leaves its
     buckets. Output: left_doc, right_doc, hamming."""
-    assert bits % bands == 0 and hamming_max < bands
-    band_bits = bits // bands
-    # persist: the signature table feeds both join sides; localCheckpoint the
-    # (small) candidate set below so sh can be unpersisted HERE instead of
-    # leaking into the caller's session (library callers don't clearCache)
-    sh = simhash(docs, bits).persist()
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_key",
-        F.expr(f"shiftright(simhash, band_id * {band_bits}) % {1 << band_bits}"),
-    )
-    l = banded.select(
-        "band_id", "band_key",
-        F.col("doc_id").alias("left_doc"), F.col("simhash").alias("l_sh"),
-    )
-    r = banded.select(
-        F.col("band_id").alias("band_id_r"), F.col("band_key").alias("band_key_r"),
-        F.col("doc_id").alias("right_doc"), F.col("simhash").alias("r_sh"),
-    )
-    try:
-        cand = (
-            l.join(
-                r,
-                (l.band_id == r.band_id_r)
-                & (l.band_key == r.band_key_r)
-                & (l.left_doc < r.right_doc),
-            )
-            .select("left_doc", "right_doc", "l_sh", "r_sh")
-            .dropDuplicates(["left_doc", "right_doc"])
-            .localCheckpoint()  # eager: materializes the candidate join
-        )
-    finally:
-        sh.unpersist()
-    return cand.select(
-        "left_doc",
-        "right_doc",
-        F.expr("cast(bit_count(l_sh ^ r_sh) as int)").alias("hamming"),
-    ).where(F.col("hamming") <= hamming_max)
+    return _simhash_band_pairs(simhash(docs, bits), bits, bands, hamming_max)
 
 
 # ---- wide SimHash (production fingerprint width) -----------------------------
@@ -491,39 +467,25 @@ def simhash_wide_dup_pairs(
     collision density ~ n^2 * C(60,<=3)/2^60 random pairs stay negligible
     at production corpus sizes where the 16-bit form drowns (BENCH.md sf1
     row). Output: left_doc, right_doc, hamming."""
+    return _simhash_band_pairs(simhash_wide(docs, bits), bits, bands, hamming_max)
+
+
+def _simhash_band_pairs(
+    sh: DataFrame, bits: int, bands: int, hamming_max: int
+) -> DataFrame:
+    """Banded SimHash near-dup pairs over a (doc_id, simhash) table: the
+    shared band join (_band_candidates) on `bands` slices of `bits // bands`
+    bits, then the exact Hamming verify. hamming_max < bands makes the
+    result EXACTLY the all-pairs one (pigeonhole). Output: left_doc,
+    right_doc, hamming."""
     assert bits % bands == 0 and hamming_max < bands
     band_bits = bits // bands
-    sh = simhash_wide(docs, bits).persist()
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band_id"),
-    ).withColumn(
-        "band_key",
-        F.expr(f"shiftright(simhash, band_id * {band_bits}) % {1 << band_bits}"),
+    cand = _band_candidates(
+        sh,
+        bands,
+        f"shiftright(simhash, band_id * {band_bits}) % {1 << band_bits}",
+        {"simhash": "sh"},
     )
-    l = banded.select(
-        "band_id", "band_key",
-        F.col("doc_id").alias("left_doc"), F.col("simhash").alias("l_sh"),
-    )
-    r = banded.select(
-        F.col("band_id").alias("band_id_r"), F.col("band_key").alias("band_key_r"),
-        F.col("doc_id").alias("right_doc"), F.col("simhash").alias("r_sh"),
-    )
-    try:
-        cand = (
-            l.join(
-                r,
-                (l.band_id == r.band_id_r)
-                & (l.band_key == r.band_key_r)
-                & (l.left_doc < r.right_doc),
-            )
-            .select("left_doc", "right_doc", "l_sh", "r_sh")
-            .dropDuplicates(["left_doc", "right_doc"])
-            .localCheckpoint()
-        )
-    finally:
-        sh.unpersist()
     return cand.select(
         "left_doc",
         "right_doc",

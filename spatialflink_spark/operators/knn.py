@@ -129,28 +129,15 @@ def knn_unbounded(seq_with_ws: DataFrame, grid: GridConfig, qs) -> DataFrame:
     query. The production form is knn_unbounded_pruned below; this one exists
     as its recall/answer oracle shape and is bench-excluded by design.
     Output shape matches knn_windowed."""
-    from pyspark.sql import functions as F2
-
-    spark = seq_with_ws.sparkSession
     qdf = local_table(
-        spark, [(q.q_id, q.q_n_tok, q.k) for q in qs], "q_id string, q_n_tok int, k int"
+        seq_with_ws.sparkSession,
+        [(q.q_id, q.q_n_tok, q.k) for q in qs],
+        "q_id string, q_n_tok int, k int",
     )
-    cand = seq_with_ws.join(F2.broadcast(qdf)).withColumn(
-        "dist", F2.expr("abs(n_tok - q_n_tok)")
+    cand = seq_with_ws.join(F.broadcast(qdf)).select(
+        "ws", "q_id", "k", "doc_id", F.expr("abs(n_tok - q_n_tok)").alias("dist"), "seq_no"
     )
-    per_doc = cand.groupBy("ws", "q_id", "k", "doc_id").agg(
-        F2.min(F2.struct("dist", "seq_no")).alias("_m")
-    )
-    w = Window.partitionBy("ws", "q_id").orderBy(F2.col("_m.dist"), F2.col("doc_id"))
-    return (
-        per_doc.withColumn("rank", F2.row_number().over(w).cast("int"))
-        .where(F2.col("rank") <= F2.col("k"))
-        .select(
-            "ws", "q_id", "rank", "doc_id",
-            F2.col("_m.seq_no").alias("seq_no"),
-            F2.col("_m.dist").alias("dist"),
-        )
-    )
+    return knn_merge(cand)
 
 
 def knn_unbounded_pruned(
@@ -177,14 +164,14 @@ def knn_unbounded_pruned(
        the window) and re-verifies — the literal layer-expansion loop, a few
        driver-checked rounds at most because r0 is already near-correct.
     3. CUT — radius-bounded candidates -> per-doc dedup-keep-min -> global
-       rank cut at k (knn_windowed stage 2). Exactness: any doc outside the
+       rank cut at k (knn_merge, knn_windowed's stage 2). Exactness: any doc outside the
        final radius has dist strictly greater than the k-th candidate doc's
        min dist, so it cannot displace a result row (nor shift a tie, since
        ties require equal dist).
 
     Output shape matches knn_unbounded: ws, q_id, rank, doc_id, seq_no, dist.
     """
-    from spatialflink_spark.operators.cells import with_cell
+    from spatialflink_spark.operators.cells import clamped_cell_sql, with_cell
 
     spark = seq_with_ws.sparkSession
     cl = grid.cell_len
@@ -243,14 +230,8 @@ def knn_unbounded_pruned(
                     # are absorbed by cell_of's clamp — otherwise the range
                     # is empty and the (ws, q_id) group silently vanishes
                     # instead of matching the knn_unbounded golden
-                    F.expr(
-                        f"cast(least(greatest(floor((q_n_tok - r) / {cl}), 0), "
-                        f"{grid.num_cells - 1}) as int)"
-                    ),
-                    F.expr(
-                        f"cast(least(floor((q_n_tok + r) / {cl}), "
-                        f"{grid.num_cells - 1}) as int)"
-                    ),
+                    F.expr(clamped_cell_sql(grid, "(q_n_tok - r)")),
+                    F.expr(clamped_cell_sql(grid, "(q_n_tok + r)")),
                 )
                 & (F.expr("abs(n_tok - q_n_tok)") <= F.col("r"))
             )
@@ -291,20 +272,15 @@ def knn_unbounded_pruned(
         merged = parts[0]
         for p in parts[1:]:
             merged = merged.unionByName(p)
-        w_final = Window.partitionBy("ws", "q_id").orderBy(
-            F.col("_m.dist"), F.col("doc_id")
-        )
         # every part is already materialized (the lazy localCheckpoint was
         # computed by its round's convergence count), so the final rank cut
         # reads from the checkpoints — s can be unpersisted without the
         # returned plan ever touching it again
-        return (
-            merged.withColumn("rank", F.row_number().over(w_final).cast("int"))
-            .where(F.col("rank") <= F.col("k"))
-            .select(
-                "ws", "q_id", "rank", "doc_id",
-                F.col("_m.seq_no").alias("seq_no"),
+        return knn_merge(
+            merged.select(
+                "ws", "q_id", "k", "doc_id",
                 F.col("_m.dist").alias("dist"),
+                F.col("_m.seq_no").alias("seq_no"),
             )
         )
     finally:

@@ -1,4 +1,4 @@
-"""Similarity search over embedding vectors — brute-force + LSH-bucketed ANN.
+"""Similarity search over embedding vectors — brute-force + ANN.
 
 First-class training-data ops over the `embeddings` table
 (vec_id bigint, embedding array<float>, label int):
@@ -12,7 +12,17 @@ First-class training-data ops over the `embeddings` table
   probe touches 1/2^bits of the data; brute force stays as the verification
   path. Same output shape, bucketed semantics (documented approximation).
 
-Both have exact DuckDB oracle twins (same summation order, double math,
+Every ANN operator here is a CANDIDATE step (sign-bucket, Hamming-mask,
+k-means centroid or PQ-code probe) followed by an exact verify-and-cut
+(as in Distributed Stream KNN Join's candidate/verify split), and each of
+those decisions has ONE builder below: the inverted-file assignment
+(_km_assign), the nearest-centroid probe (_km_probe in-plan,
+_probe_cids driver-side), the Hamming-mask probe (_hamming_probes), the
+single-query cut (_topk_ranked), the per-query cut (_batch_topk_two_stage),
+the PQ table and score (_pq_table, _adc_expr) and the recall report
+(_recall_at_k). An operator only chooses its candidate step.
+
+All have exact DuckDB oracle twins (same summation order, double math,
 round(6)).
 """
 
@@ -20,35 +30,20 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from spatialflink_spark.session import local_table, spread
 
 QUERY_VEC_ID = 0  # deterministic query: the embedding of vec_id 0
 DEFAULT_K = 10
 SIGN_BITS = 4
 
 
-def _cos_expr(a: str, b: str) -> str:
-    """cosine(a, b) in double precision, left-to-right summation."""
-    dot = (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (s, v) -> s + v)"
-    )
-    na = (
-        f"aggregate({a}, cast(0.0 as double), "
-        "(s, x) -> s + cast(x as double) * cast(x as double))"
-    )
-    nb = (
-        f"aggregate({b}, cast(0.0 as double), "
-        "(s, x) -> s + cast(x as double) * cast(x as double))"
-    )
-    return f"round({dot} / (sqrt({na}) * sqrt({nb})), 6)"
-
-
 def _norm_expr(col: str) -> str:
-    """sqrt of the squared-norm aggregate — EXACTLY the factor _cos_expr
-    divides by, staged once per VECTOR instead of recomputed once per
-    scored PAIR (guide §2.3 "don't compute things you throw away": the old
-    per-pair form re-ran both norm passes |pairs| times; same doubles, same
-    order, so cos_sim is bit-identical)."""
+    """sqrt of the squared-norm aggregate — the per-vector cosine factor,
+    staged once per VECTOR instead of recomputed once per scored PAIR
+    (guide §2.3 "don't compute things you throw away"; same doubles in the
+    same order as the oracle's per-pair form, so cos_sim is bit-identical)."""
     return (
         f"sqrt(aggregate({col}, cast(0.0 as double), "
         "(s, x) -> s + cast(x as double) * cast(x as double)))"
@@ -56,10 +51,9 @@ def _norm_expr(col: str) -> str:
 
 
 def _cos_pre_expr(a: str, b: str, sna: str, snb: str) -> str:
-    """cosine(a, b) with PRE-STAGED per-vector norms sna/snb — the same
-    double-precision operations in the same order as _cos_expr (sqrt(na)
-    and sqrt(nb) are just column references now), only the dot product is
-    per-pair work."""
+    """cosine(a, b) in double precision, left-to-right summation, with
+    PRE-STAGED per-vector norms sna/snb (column names or _norm_expr
+    expressions) — only the dot product is per-pair work."""
     dot = (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
         "cast(0.0 as double), (s, v) -> s + v)"
@@ -67,9 +61,12 @@ def _cos_pre_expr(a: str, b: str, sna: str, snb: str) -> str:
     return f"round({dot} / ({sna} * {snb}), 6)"
 
 
-def _with_query(emb: DataFrame) -> DataFrame:
-    from spatialflink_spark.session import spread
+def _cos_sim(snv: str = "_snv") -> Column:
+    """cos_sim of a candidate `embedding` against the query's q_emb/_snq."""
+    return F.expr(_cos_pre_expr("embedding", "q_emb", snv, "_snq")).alias("cos_sim")
 
+
+def _with_query(emb: DataFrame) -> DataFrame:
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q_emb"),
         F.expr(_norm_expr("embedding")).alias("_snq"),
@@ -83,8 +80,20 @@ def _with_query(emb: DataFrame) -> DataFrame:
     )
 
 
-def _topk_ranked(scored: DataFrame, k: int) -> DataFrame:
-    """Bounded top-k of a scored relation: (rank, vec_id, label, cos_sim).
+def _rank_order(score: str, desc: bool) -> tuple[Column, Column]:
+    """The total ranking order: (score in `desc` order, vec_id asc)."""
+    return (F.col(score).desc() if desc else F.col(score).asc(), F.col("vec_id").asc())
+
+
+def _topk_ranked(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos_sim",
+    desc: bool = True,
+    payload: tuple[str, ...] = ("label",),
+) -> DataFrame:
+    """Bounded single-query top-k of a scored relation, ranked by (score in
+    `desc` order, vec_id asc). Output: rank, vec_id, *payload, score.
 
     orderBy().limit(k) compiles to TakeOrderedAndProject — a per-partition
     size-k heap cut merged on the driver — so no task ever sorts more than
@@ -93,26 +102,24 @@ def _topk_ranked(scored: DataFrame, k: int) -> DataFrame:
     fine at any scale). This replaces the round-3 un-partitioned
     row_number() window, which sorted EVERY scored row in one task — the
     same windowAll anti-pattern the grid kNN avoids (knn.knn_merge)."""
-    top = scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(k)
-    return (
-        top.withColumn(
-            "rank",
-            F.expr(
-                "row_number() OVER (ORDER BY cos_sim DESC, vec_id ASC)"
-            ).cast("int"),
-        )
-        .select("rank", "vec_id", "label", "cos_sim")
+    top = scored.orderBy(*_rank_order(score, desc)).limit(k)
+    d = "DESC" if desc else "ASC"
+    rank = F.expr(f"row_number() OVER (ORDER BY {score} {d}, vec_id ASC)")
+    return top.withColumn("rank", rank.cast("int")).select(
+        "rank", "vec_id", *payload, score
     )
+
+
+def _probe_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Verify-and-cut of a single-query probe: exact cosine of each probed
+    candidate, then the bounded top-k. The candidate's norm is computed
+    HERE, above the probe join, so only probed rows pay for it."""
+    return _topk_ranked(cand.select("vec_id", "label", _cos_sim(_norm_expr("embedding"))), k)
 
 
 def cosine_topk(emb: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Exact top-k by (cosine desc, vec_id asc) vs the query vector."""
-    scored = _with_query(emb).select(
-        "vec_id",
-        "label",
-        F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias("cos_sim"),
-    )
-    return _topk_ranked(scored, k)
+    return _topk_ranked(_with_query(emb).select("vec_id", "label", _cos_sim()), k)
 
 
 def bucket_expr(col: str, bits: int = SIGN_BITS) -> Column:
@@ -124,33 +131,52 @@ def bucket_expr(col: str, bits: int = SIGN_BITS) -> Column:
     return F.expr(f"cast({terms} as int)")
 
 
+def _sign_bucket_topk(emb: DataFrame, k: int, bits: int, probe: str) -> DataFrame:
+    """Single-query sign-bucket ANN: the candidates are the corpus rows
+    whose `bucket` satisfies the SQL `probe` predicate against the query's
+    `q_bucket`; exact cosine top-k among them (_probe_topk)."""
+    b = emb.withColumn("bucket", bucket_expr("embedding", bits))
+    qb = b.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("bucket").alias("q_bucket"),
+        F.col("embedding").alias("q_emb"),
+        F.expr(_norm_expr("embedding")).alias("_snq"),
+    )
+    cand = b.where(F.col("vec_id") != QUERY_VEC_ID).join(F.broadcast(qb), F.expr(probe))
+    return _probe_topk(cand, k)
+
+
 def cosine_topk_ivf(emb: DataFrame, k: int = DEFAULT_K, bits: int = SIGN_BITS) -> DataFrame:
     """ANN variant: probe only the query's sign bucket, then exact top-k
     within it. Recall < 1 by design; the brute-force op is the oracle for
     measuring it."""
-    b = emb.withColumn("bucket", bucket_expr("embedding", bits)).withColumn(
-        "_snv", F.expr(_norm_expr("embedding"))
-    )
-    qb = b.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("bucket").alias("q_bucket"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_snv").alias("_snq"),
-    )
-    cand = (
-        b.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(qb), F.col("bucket") == F.col("q_bucket"))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return _topk_ranked(cand, k)
+    return _sign_bucket_topk(emb, k, bits, "bucket = q_bucket")
 
 
 DUP_COS_THRESHOLD = 0.4
+
+
+def _pair_side(base: DataFrame, side: str, *extra: Column) -> DataFrame:
+    """One side of the embedding self-join: <side>_vec, then the l_/r_
+    prefixed embedding and norm, then `extra`."""
+    p = side[0]
+    return base.select(
+        F.col("vec_id").alias(f"{side}_vec"),
+        F.col("embedding").alias(f"{p}_emb"),
+        F.col("_n").alias(f"{p}_n"),
+        *extra,
+    )
+
+
+def _cos_verified(cand: DataFrame, threshold: float) -> DataFrame:
+    """Exact cosine of each candidate pair, kept at >= threshold. Norms are
+    precomputed per vector (once, not per pair) — the division happens in
+    the same double order as the oracle, so round(6) agrees."""
+    pairs = cand.select(
+        "left_vec",
+        "right_vec",
+        F.expr(_cos_pre_expr("l_emb", "r_emb", "l_n", "r_n")).alias("cos_sim"),
+    )
+    return pairs.where(F.col("cos_sim") >= threshold)
 
 
 def embedding_dup_pairs(emb: DataFrame, threshold: float = DUP_COS_THRESHOLD) -> DataFrame:
@@ -162,40 +188,26 @@ def embedding_dup_pairs(emb: DataFrame, threshold: float = DUP_COS_THRESHOLD) ->
     exact pairwise check only inside blocks; the all-pairs form here is the
     oracle those approximations are measured against (same role as the
     reference's RealTimeNaive paths)."""
-    norm = (
-        "sqrt(aggregate(embedding, cast(0.0 as double), "
-        "(s, x) -> s + cast(x as double) * cast(x as double)))"
+    base = spread(emb).select(
+        "vec_id", "embedding", F.expr(_norm_expr("embedding")).alias("_n")
     )
-    from spatialflink_spark.session import spread
-
-    base = spread(emb).select("vec_id", "embedding", F.expr(norm).alias("_n"))
-    l = base.select(
-        F.col("vec_id").alias("left_vec"),
-        F.col("embedding").alias("l_emb"),
-        F.col("_n").alias("l_n"),
+    cand = _pair_side(base, "left").join(
+        _pair_side(base, "right"), F.col("left_vec") < F.col("right_vec")
     )
-    r = base.select(
-        F.col("vec_id").alias("right_vec"),
-        F.col("embedding").alias("r_emb"),
-        F.col("_n").alias("r_n"),
-    )
-    dot = (
-        "aggregate(zip_with(l_emb, r_emb, (x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (s, v) -> s + v)"
-    )
-    # norms precomputed per vector (once, not per pair) — the division
-    # happens in the same double order as the oracle, so round(6) agrees
-    pairs = l.join(r, F.col("left_vec") < F.col("right_vec")).select(
-        "left_vec",
-        "right_vec",
-        F.expr(f"round({dot} / (l_n * r_n), 6)").alias("cos_sim"),
-    )
-    return pairs.where(F.col("cos_sim") >= threshold)
+    return _cos_verified(cand, threshold)
 
 
 def _hamming_masks(bits: int, radius: int) -> list[int]:
     """All XOR masks of `bits` bits with popcount <= radius, ascending."""
     return sorted(m for m in range(1 << bits) if bin(m).count("1") <= radius)
+
+
+def _hamming_probes(col: str, bits: int, radius: int) -> Column:
+    """Explode bucket column `col` to every bucket within Hamming `radius`
+    of it (col XOR each _hamming_masks mask, ascending). The probe buckets
+    are distinct, so each candidate joins its probing row exactly once."""
+    probes = ", ".join(f"{col} ^ {m}" for m in _hamming_masks(bits, radius))
+    return F.explode(F.expr(f"array({probes})"))
 
 
 # default blocking config: tuned for the production dedup regime (true
@@ -234,47 +246,20 @@ def embedding_dup_pairs_blocked(
     recall at the cost of probing most of the space — measured in
     tests/test_naive_equivalence.py.
     """
-    norm = (
-        "sqrt(aggregate(embedding, cast(0.0 as double), "
-        "(s, x) -> s + cast(x as double) * cast(x as double)))"
-    )
-    from spatialflink_spark.session import spread
-
     base = spread(emb).select(
         "vec_id",
         "embedding",
-        F.expr(norm).alias("_n"),
+        F.expr(_norm_expr("embedding")).alias("_n"),
         bucket_expr("embedding", bits).alias("bucket"),
     )
-    masks = _hamming_masks(bits, hamming)
-    probes = ", ".join(f"bucket ^ {m}" for m in masks)
-    l = base.select(
-        F.col("vec_id").alias("left_vec"),
-        F.col("embedding").alias("l_emb"),
-        F.col("_n").alias("l_n"),
-        F.explode(F.expr(f"array({probes})")).alias("probe"),
-    )
-    r = base.select(
-        F.col("vec_id").alias("right_vec"),
-        F.col("embedding").alias("r_emb"),
-        F.col("_n").alias("r_n"),
-        F.col("bucket").alias("r_bucket"),
-    )
-    dot = (
-        "aggregate(zip_with(l_emb, r_emb, (x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (s, v) -> s + v)"
-    )
+    l = _pair_side(base, "left", _hamming_probes("bucket", bits, hamming).alias("probe"))
+    r = _pair_side(base, "right", F.col("bucket").alias("r_bucket"))
     cand = l.join(
         r,
         (F.col("probe") == F.col("r_bucket"))
         & (F.col("left_vec") < F.col("right_vec")),
     )
-    pairs = cand.select(
-        "left_vec",
-        "right_vec",
-        F.expr(f"round({dot} / (l_n * r_n), 6)").alias("cos_sim"),
-    )
-    return pairs.where(F.col("cos_sim") >= threshold)
+    return _cos_verified(cand, threshold)
 
 
 def cosine_topk_ivf_multiprobe(
@@ -284,30 +269,11 @@ def cosine_topk_ivf_multiprobe(
     Hamming distance 1 (bits+1 buckets of 2^bits) — the standard recall
     recovery for sign-LSH, still touching only (bits+1)/2^bits of the data.
     Same output shape as cosine_topk; recall measured against it in tests."""
-    b = emb.withColumn("bucket", bucket_expr("embedding", bits)).withColumn(
-        "_snv", F.expr(_norm_expr("embedding"))
-    )
-    qb = b.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("bucket").alias("q_bucket"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_snv").alias("_snq"),
-    )
     probe = " OR ".join(
         ["bucket = q_bucket"]
         + [f"bucket = (q_bucket ^ {1 << i})" for i in range(bits)]
     )
-    cand = (
-        b.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(qb), F.expr(probe))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return _topk_ranked(cand, k)
+    return _sign_bucket_topk(emb, k, bits, probe)
 
 
 # ---------------------------------------------------------------------------
@@ -320,7 +286,7 @@ def cosine_topk_ivf_multiprobe(
 # trap that would otherwise flip near-tie assignments between dialects never
 # arises (production IVF quantizes anyway — this is PQ-style honesty, not a
 # test crutch). The exact re-rank inside probed clusters uses the ORIGINAL
-# float vectors via the same _cos_expr as every other op.
+# float vectors via the same _cos_pre_expr as every other op.
 # ---------------------------------------------------------------------------
 
 KM_QSCALE = 10_000
@@ -339,13 +305,16 @@ _KM_CDIST = (
     "aggregate(zip_with(qv, c.cq, (a, b) -> (a - b) * (a - b)), "
     "cast(0 as bigint), (s, v) -> s + v)"
 )
-
-# argmin over the packed centroid array with (dist, cid) tie-break — struct
-# ordering is lexicographic, so array_min IS the deterministic argmin. Pure
-# per-row codegen: assignment costs NO shuffle (the centroid table is one
-# packed broadcast row), where a crossJoin+groupBy assignment would shuffle
-# an n_centroids-amplified corpus with the embedding inside the grouping key.
-_KM_ASSIGN = f"array_min(transform(_cents, c -> struct({_KM_CDIST} as d, c.cid as cid))).cid"
+# one (dist, cid) struct per packed centroid — struct ordering is
+# lexicographic, so array_min over it IS the deterministic (dist, cid)
+# argmin and array_sort ranks the centroids for the probe
+_KM_RANKED = f"transform(_cents, c -> struct({_KM_CDIST} as d, c.cid as cid))"
+_KM_ARGMIN = f"array_min({_KM_RANKED})"
+# argmin centroid id. Pure per-row codegen: assignment costs NO shuffle (the
+# centroid table is one packed broadcast row), where a crossJoin+groupBy
+# assignment would shuffle an n_centroids-amplified corpus with the
+# embedding inside the grouping key.
+_KM_ASSIGN = f"{_KM_ARGMIN}.cid"
 
 
 def _packed_centroids(cent: DataFrame) -> DataFrame:
@@ -354,6 +323,78 @@ def _packed_centroids(cent: DataFrame) -> DataFrame:
     return cent.agg(
         F.expr("array_sort(collect_list(struct(cid, cq)))").alias("_cents")
     )
+
+
+def _km_packed(
+    emb: DataFrame, centroids: DataFrame | None, n_centroids: int, iters: int
+) -> DataFrame:
+    """The packed centroid row of `centroids`, or of centroids fitted inline
+    on `emb` when None — lazily checkpointed, since the assignment and the
+    probe both read it."""
+    if centroids is None:
+        centroids = kmeans_centroids(emb, n_centroids, iters)
+    return _packed_centroids(centroids).localCheckpoint(eager=False)
+
+
+def _km_base(emb: DataFrame, *cols: str) -> DataFrame:
+    """`cols` of the spread corpus, then its quantized vector `qv`."""
+    return spread(emb).select(*cols, F.expr(_km_quant("embedding")).alias("qv"))
+
+
+def _km_assign(
+    q: DataFrame,
+    packed: DataFrame,
+    cols: tuple,
+    cid: str = "cid",
+    dist: str | None = None,
+) -> DataFrame:
+    """THE inverted-file assignment, shared by the Lloyd loop and every
+    k-means operator: `cols` (names or Columns) of each row of `q`, which
+    carries `qv`, then its nearest centroid's id (int) as `cid` and, when
+    `dist` is given, the quantized squared-L2 to that centroid. One
+    broadcast of the packed row, per-row argmin — never a shuffle."""
+    j = q.crossJoin(F.broadcast(packed))
+    if dist is None:
+        return j.select(*cols, F.expr(f"cast({_KM_ASSIGN} as int)").alias(cid))
+    a = j.select(*cols, F.expr(_KM_ARGMIN).alias("_a"))
+    return a.select(
+        *a.columns[:-1],
+        F.expr("cast(_a.cid as int)").alias(cid),
+        F.col("_a.d").alias(dist),
+    )
+
+
+def _km_probe(
+    q: DataFrame, packed: DataFrame, n_probe: int, cols: tuple, cid: str = "cid"
+) -> DataFrame:
+    """THE in-plan nearest-centroid probe: each row of `q` (carrying `qv`)
+    exploded to its `n_probe` nearest centroids, (*cols, cid) — sort the
+    packed (dist, cid) structs per row and slice, again no shuffle."""
+    nearest = F.expr(f"slice(array_sort({_KM_RANKED}), 1, {n_probe})")
+    return (
+        q.crossJoin(F.broadcast(packed))
+        .select(*cols, F.explode(nearest).alias("_p"))
+        .select(*cols, F.col("_p.cid").alias(cid))
+    )
+
+
+def _probe_cids(spark, path: str, qv: list[int], n_probe: int) -> list[int]:
+    """Driver-side twin of _km_probe over a persisted centroid table: the
+    `n_probe` nearest cids by (quantized squared-L2, cid) — Python bigints
+    reproduce the in-plan ranking exactly."""
+    ranked = sorted(
+        (sum((a - b) * (a - b) for a, b in zip(qv, row["cq"])), int(row["cid"]))
+        for row in spark.read.parquet(f"{path}/centroids").collect()
+    )
+    return [cid for _, cid in ranked[:n_probe]]
+
+
+def _index_query(rows: DataFrame, cols: tuple[str, ...], path: str):
+    """The query vector's row of a persisted index table (one lookup scan)."""
+    got = rows.where(F.col("vec_id") == QUERY_VEC_ID).select(*cols).collect()
+    if not got:
+        raise ValueError(f"query vec_id {QUERY_VEC_ID} not present in the index at {path}")
+    return got[0]
 
 
 def kmeans_centroids(
@@ -366,11 +407,7 @@ def kmeans_centroids(
     previous centroid. Everything stays in-plan (broadcast centroid table,
     posexplode + groupBy update) — no driver collect; the per-iteration
     centroid relation is n_centroids rows."""
-    from spatialflink_spark.session import spread
-
-    q = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    ).localCheckpoint(eager=False)
+    q = _km_base(emb, "vec_id").localCheckpoint(eager=False)
     cent = q.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("cq")
     )
@@ -381,9 +418,7 @@ def kmeans_centroids(
         # iteration — 2^iters - 1 full-corpus aggregation subtrees in the
         # plan (same fix as dedup_components_star's per-round checkpoint)
         cent = cent.localCheckpoint(eager=False)
-        assigned = q.crossJoin(F.broadcast(_packed_centroids(cent))).select(
-            "vec_id", "qv", F.expr(_KM_ASSIGN).alias("cid")
-        )
+        assigned = _km_assign(q, _packed_centroids(cent), ("vec_id", "qv"))
         upd = (
             assigned.select("cid", F.posexplode("qv").alias("pos", "v"))
             .groupBy("cid", "pos")
@@ -422,55 +457,21 @@ def cosine_topk_ivf_kmeans(
     (not axis-aligned) boundaries — the production IVF the sign-bucket
     variants approximate. Output shape matches cosine_topk; recall measured
     against it in tests; full-probe (n_probe = n_centroids) == exact."""
-    from spatialflink_spark.session import spread
-
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.expr(_km_quant("embedding")).alias("qv"),
-        F.expr(_norm_expr("embedding")).alias("_snv"),
-    )
-    assigned = base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", "label", "embedding", "_snv", F.expr(_KM_ASSIGN).alias("cid")
-    )
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    cols = ("vec_id", "label", "embedding")
+    base = _km_base(emb, *cols)
     qrow = base.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q_emb"),
-        F.col("qv").alias("qv"),
-        F.col("_snv").alias("_snq"),
+        "qv",
+        F.expr(_norm_expr("embedding")).alias("_snq"),
     )
-    # n_probe nearest centroids per query: sort the packed (dist, cid)
-    # structs per row, slice — again no shuffle
-    probed = (
-        qrow.crossJoin(F.broadcast(packed))
-        .select(
-            "q_emb",
-            "_snq",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform(_cents, c -> "
-                    f"struct({_KM_CDIST} as d, c.cid as cid))), 1, {n_probe})"
-                )
-            ).alias("_p"),
-        )
-        .select(F.col("_p.cid").alias("cid"), "q_emb", "_snq")
-    )
+    probed = _km_probe(qrow, packed, n_probe, ("q_emb", "_snq"))
     cand = (
-        assigned.where(F.col("vec_id") != QUERY_VEC_ID)
+        _km_assign(base, packed, cols)
+        .where(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probed), "cid")
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-                "cos_sim"
-            ),
-        )
     )
-    return _topk_ranked(cand, k)
+    return _probe_topk(cand, k)
 
 
 def cosine_topk_batch_kmeans(
@@ -487,24 +488,17 @@ def cosine_topk_batch_kmeans(
     centroids, candidates are the corpus vectors assigned to those clusters
     (a pure equi-join on centroid id), exact cosine re-rank per query via
     the two-stage cut (stage-1 key = cluster id). Composes the round-4
-    batch machinery with the learned inverted file.
+    batch machinery with the learned inverted file. The corpus norm is
+    staged BEFORE the join here: a vector joins once per probing query, so
+    a norm computed after the join would be computed several times.
     Output: q_id, rank, vec_id, label, cos_sim."""
-    from spatialflink_spark.session import spread
-
     qm = QUERY_MOD if query_mod is None else query_mod
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.expr(_km_quant("embedding")).alias("qv"),
-        F.expr(_norm_expr("embedding")).alias("_snv"),
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    base = _km_base(emb, "vec_id", "label", "embedding").withColumn(
+        "_snv", F.expr(_norm_expr("embedding"))
     )
-    assigned = base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", "label", "embedding", "_snv", F.expr(_KM_ASSIGN).alias("bucket")
+    assigned = _km_assign(
+        base, packed, ("vec_id", "label", "embedding", "_snv"), "bucket"
     )
     qset = base.where(F.col("vec_id") % qm == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -512,35 +506,11 @@ def cosine_topk_batch_kmeans(
         F.col("_snv").alias("_snq"),
         "qv",
     )
-    qprobe = (
-        qset.crossJoin(F.broadcast(packed))
-        .select(
-            "q_id",
-            "q_emb",
-            "_snq",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform(_cents, c -> "
-                    f"struct({_KM_CDIST} as d, c.cid as cid))), 1, {n_probe})"
-                )
-            ).alias("_p"),
-        )
-        .select("q_id", "q_emb", "_snq", F.col("_p.cid").alias("bucket"))
+    qprobe = _km_probe(qset, packed, n_probe, ("q_id", "q_emb", "_snq"), "bucket")
+    cond = (assigned["bucket"] == qprobe["bucket"]) & (
+        assigned["vec_id"] != qprobe["q_id"]
     )
-    scored = assigned.join(
-        F.broadcast(qprobe),
-        (assigned["bucket"] == qprobe["bucket"])
-        & (assigned["vec_id"] != qprobe["q_id"]),
-    ).select(
-        "q_id",
-        "vec_id",
-        "label",
-        assigned["bucket"].alias("bucket"),
-        F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-            "cos_sim"
-        ),
-    )
-    return _batch_topk_two_stage(scored, k)
+    return _batch_cos_topk(assigned, qprobe, cond, k)
 
 
 def kmeans_label_purity(
@@ -561,19 +531,8 @@ def kmeans_label_purity(
     assignment scan is bounded regardless of corpus size. Majority ties
     break to the smallest label. Output: cid, n_vecs, top_label, n_top,
     purity."""
-    from pyspark.sql.window import Window
-    from spatialflink_spark.session import spread
-
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id", "label", F.expr(_km_quant("embedding")).alias("qv")
-    )
-    assigned = base.crossJoin(F.broadcast(packed)).select(
-        "label", F.expr(_KM_ASSIGN).alias("cid")
-    )
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    assigned = _km_assign(_km_base(emb, "vec_id", "label"), packed, ("label",))
     per = assigned.groupBy("cid", "label").agg(
         F.expr("cast(count(1) as bigint)").alias("n")
     )
@@ -614,15 +573,8 @@ def build_ivf_index(
     ~n_probe/n_centroids of the corpus, not a full scan plus a filter."""
     cent = kmeans_centroids(emb, n_centroids, iters).localCheckpoint(eager=False)
     cent.write.mode("overwrite").parquet(f"{path}/centroids")
-    from spatialflink_spark.session import spread
-
-    packed = _packed_centroids(cent)
-    base = spread(emb).select(
-        "vec_id", "label", "embedding", F.expr(_km_quant("embedding")).alias("qv")
-    )
-    assigned = base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", "label", "embedding", "qv", F.expr(_KM_ASSIGN).alias("cid")
-    )
+    cols = ("vec_id", "label", "embedding")
+    assigned = _km_assign(_km_base(emb, *cols), _packed_centroids(cent), (*cols, "qv"))
     assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/corpus")
 
 
@@ -635,36 +587,17 @@ def search_ivf_index(
     """SEARCH half over a persisted index: fetch the query row (ONE lookup
     scan — a production server takes the query vector as an argument and
     skips even that), pick its n_probe nearest centroids DRIVER-SIDE over
-    the tiny centroid table (quantized-integer squared-L2 with the same
-    (dist, cid) tie-break as _KM_ASSIGN — Python bigints reproduce it
-    exactly), then scan ONLY those cid partitions of the corpus (cid IN
-    (...literals...) is a partition filter — the files of unprobed clusters
-    are never opened) with the query embedding inlined as a one-row literal
-    relation. The probed scan is the only corpus-wide I/O in the plan.
-    Answer-identical to cosine_topk_ivf_kmeans at the same (n_centroids,
-    iters, n_probe) — pinned by an equivalence test."""
-    from spatialflink_spark.session import local_table
-
+    the tiny centroid table (_probe_cids), then scan ONLY those cid
+    partitions of the corpus (cid IN (...literals...) is a partition
+    filter — the files of unprobed clusters are never opened) with the
+    query embedding inlined as a one-row literal relation. The probed scan
+    is the only corpus-wide I/O in the plan. Answer-identical to
+    cosine_topk_ivf_kmeans at the same (n_centroids, iters, n_probe) —
+    pinned by an equivalence test."""
     corpus = spark.read.parquet(f"{path}/corpus")
-    qrows = (
-        corpus.where(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding", "qv")
-        .collect()
-    )
-    if not qrows:
-        raise ValueError(
-            f"search_ivf_index: query vec_id {QUERY_VEC_ID} not present in "
-            f"the index corpus at {path}"
-        )
-    q_emb_vals = list(qrows[0]["embedding"])
-    qv = [int(v) for v in qrows[0]["qv"]]
-    cents = spark.read.parquet(f"{path}/centroids").collect()
-    ranked = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, row["cq"])), int(row["cid"]))
-        for row in cents
-    )
-    probed_cids = [cid for _, cid in ranked[:n_probe]]
-    q_lit = local_table(spark, [(q_emb_vals,)], "q_emb array<float>").withColumn(
+    q = _index_query(corpus, ("embedding", "qv"), path)
+    probed_cids = _probe_cids(spark, path, [int(v) for v in q["qv"]], n_probe)
+    q_lit = local_table(spark, [(list(q["embedding"]),)], "q_emb array<float>").withColumn(
         "_snq", F.expr(_norm_expr("q_emb"))
     )
     cand = (
@@ -672,15 +605,8 @@ def search_ivf_index(
         .where(F.col("vec_id") != QUERY_VEC_ID)
         .withColumn("_snv", F.expr(_norm_expr("embedding")))
         .crossJoin(F.broadcast(q_lit))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-                "cos_sim"
-            ),
-        )
     )
-    return _topk_ranked(cand, k)
+    return _topk_ranked(cand.select("vec_id", "label", _cos_sim()), k)
 
 
 # ---------------------------------------------------------------------------
@@ -721,9 +647,7 @@ def _batch_topk_two_stage(
     (knn.two_stage_topk), without the dedup step because each
     (q_id, vec_id) pair occurs exactly once.
     Output: q_id, rank, vec_id, *payload, score."""
-    from pyspark.sql.window import Window
-
-    order = (F.col(score).desc() if desc else F.col(score).asc(), F.col("vec_id").asc())
+    order = _rank_order(score, desc)
     w1 = Window.partitionBy("q_id", "bucket").orderBy(*order)
     partial = (
         scored.withColumn("_r", F.row_number().over(w1))
@@ -735,6 +659,28 @@ def _batch_topk_two_stage(
         partial.withColumn("rank", F.row_number().over(w2).cast("int"))
         .where(F.col("rank") <= k)
         .select("q_id", "rank", "vec_id", *payload, score)
+    )
+
+
+def _batch_cos_topk(corpus: DataFrame, queries: DataFrame, cond: Column, k: int) -> DataFrame:
+    """Verify-and-cut of a batch probe: exact cosine of every (query,
+    candidate) pair `cond` admits between the corpus (vec_id, label,
+    embedding, bucket, _snv) and the broadcast queries (q_id, q_emb, _snq),
+    then the two-stage per-query cut keyed on the corpus bucket."""
+    scored = corpus.join(F.broadcast(queries), cond).select(
+        "q_id", "vec_id", "label", corpus["bucket"], _cos_sim()
+    )
+    return _batch_topk_two_stage(scored, k)
+
+
+def _sign_corpus(emb: DataFrame, bits: int) -> DataFrame:
+    """The batch rankers' corpus side: sign bucket and norm per vector."""
+    return spread(emb).select(
+        "vec_id",
+        "label",
+        "embedding",
+        bucket_expr("embedding", bits).alias("bucket"),
+        F.expr(_norm_expr("embedding")).alias("_snv"),
     )
 
 
@@ -750,30 +696,12 @@ def cosine_topk_batch(
     ever holds more than one (query, bucket) candidate slice. The brute-force
     truth the ANN variant below is recall-measured against, and itself
     scale-safe. Output: q_id, rank, vec_id, label, cos_sim."""
-    from spatialflink_spark.session import spread
-
     q = query_table(emb, query_mod).withColumn(
         "_snq", F.expr(_norm_expr("q_emb"))
     )
-    corpus = spread(emb).select(
-        "vec_id",
-        "label",
-        "embedding",
-        bucket_expr("embedding", bits).alias("bucket"),
-        F.expr(_norm_expr("embedding")).alias("_snv"),
+    return _batch_cos_topk(
+        _sign_corpus(emb, bits), q, F.col("vec_id") != F.col("q_id"), k
     )
-    scored = corpus.join(
-        F.broadcast(q), F.col("vec_id") != F.col("q_id")
-    ).select(
-        "q_id",
-        "vec_id",
-        "label",
-        "bucket",
-        F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-            "cos_sim"
-        ),
-    )
-    return _batch_topk_two_stage(scored, k)
 
 
 # batch-ANN probe config: 4 sign bits, Hamming radius 1 -> 5/16 of the
@@ -797,40 +725,17 @@ def cosine_topk_batch_ann(
     (query, candidate) joins exactly once; the same two-stage cut then ranks.
     Recall < 1 by design; measured against cosine_topk_batch in tests.
     Output: q_id, rank, vec_id, label, cos_sim."""
-    from spatialflink_spark.session import spread
-
-    corpus = spread(emb).select(
-        "vec_id",
-        "label",
-        "embedding",
-        bucket_expr("embedding", bits).alias("bucket"),
-        F.expr(_norm_expr("embedding")).alias("_snv"),
-    )
-    masks = _hamming_masks(bits, hamming)
     q = query_table(emb, query_mod).select(
         "q_id",
         "q_emb",
         F.expr(_norm_expr("q_emb")).alias("_snq"),
         bucket_expr("q_emb", bits).alias("_qb"),
     )
-    probes = ", ".join(f"_qb ^ {m}" for m in masks)
     qp = q.select(
-        "q_id", "q_emb", "_snq",
-        F.explode(F.expr(f"array({probes})")).alias("probe"),
+        "q_id", "q_emb", "_snq", _hamming_probes("_qb", bits, hamming).alias("probe")
     )
-    scored = corpus.join(
-        F.broadcast(qp),
-        (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        "vec_id",
-        "label",
-        "bucket",
-        F.expr(_cos_pre_expr("embedding", "q_emb", "_snv", "_snq")).alias(
-            "cos_sim"
-        ),
-    )
-    return _batch_topk_two_stage(scored, k)
+    cond = (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("q_id"))
+    return _batch_cos_topk(_sign_corpus(emb, bits), qp, cond, k)
 
 
 SEMDEDUP_THRESHOLD = DUP_COS_THRESHOLD
@@ -860,34 +765,21 @@ def semantic_dedup(
     once (lazy localCheckpoint) because it feeds BOTH sides of the
     self-join — without the barrier the Lloyd chain would execute twice.
     Output: vec_id, cid, keep."""
-    from spatialflink_spark.session import spread
-
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id",
-        "embedding",
-        F.expr(_km_quant("embedding")).alias("qv"),
-        F.expr(_norm_expr("embedding")).alias("_sn"),
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    base = _km_base(emb, "vec_id", "embedding").withColumn(
+        "_sn", F.expr(_norm_expr("embedding"))
     )
-    assigned = (
-        base.crossJoin(F.broadcast(packed))
-        .select("vec_id", "embedding", "_sn", F.expr(_KM_ASSIGN).alias("cid"))
-        .localCheckpoint(eager=False)
+    assigned = _km_assign(base, packed, ("vec_id", "embedding", "_sn")).localCheckpoint(
+        eager=False
     )
-    left = assigned.select(
-        F.col("cid").alias("cid"),
-        F.col("vec_id").alias("l_vec"),
-        F.col("embedding").alias("l_emb"),
-        F.col("_sn").alias("l_sn"),
-    )
-    right = assigned.select(
-        F.col("cid").alias("cid"),
-        F.col("vec_id").alias("r_vec"),
-        F.col("embedding").alias("r_emb"),
-        F.col("_sn").alias("r_sn"),
+    left, right = (
+        assigned.select(
+            F.col("cid").alias("cid"),
+            F.col("vec_id").alias(f"{p}_vec"),
+            F.col("embedding").alias(f"{p}_emb"),
+            F.col("_sn").alias(f"{p}_sn"),
+        )
+        for p in "lr"
     )
     drops = (
         left.join(right, "cid")
@@ -911,15 +803,21 @@ PQ_K = 8          # centroids per subspace -> 3-bit codes, m*k = 32 table rows
 PQ_ITERS = KM_ITERS
 
 
+def _pq_sub(emb: DataFrame, m: int) -> int:
+    """Subspace width: the embedding dimension (one-row probe) over m."""
+    d = len(emb.select("embedding").first()["embedding"])
+    if d % m:
+        raise ValueError(f"embedding dimension {d} is not a multiple of m={m}")
+    return d // m
+
+
 def pq_codebooks(
     emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = PQ_ITERS
 ) -> DataFrame:
     """Per-subspace PQ codebooks: (j, cid, cq) — the deterministic
     quantized-integer Lloyd kernel (kmeans_centroids) run independently on
     each of the m dimension slices. Output rows: m * k."""
-    d = len(emb.select("embedding").first()["embedding"])
-    assert d % m == 0, (d, m)
-    sub = d // m
+    sub = _pq_sub(emb, m)
     parts = []
     for j in range(m):
         sliced = emb.select(
@@ -947,18 +845,53 @@ def _pq_packed(cb: DataFrame) -> DataFrame:
     )
 
 
+def _pq_fit(
+    emb: DataFrame, codebooks: DataFrame | None, m: int, n_cent: int, iters: int
+) -> DataFrame:
+    """The packed codebook row of `codebooks`, or of codebooks fitted inline
+    on `emb` when None — lazily checkpointed (encode and table both read it)."""
+    if codebooks is None:
+        codebooks = pq_codebooks(emb, m, n_cent, iters)
+    return _pq_packed(codebooks).localCheckpoint(eager=False)
+
+
+def _pq_sqdist(j: str, sub: int) -> str:
+    """Quantized squared-L2 between subspace `j` of `qv` and centroid `c`."""
+    return (
+        f"aggregate(zip_with(slice(qv, {j} * {sub} + 1, {sub}), c.cq,"
+        " (a, b) -> (a - b) * (a - b)), cast(0 as bigint), (s, v) -> s + v)"
+    )
+
+
 def _pq_code_expr(m: int, sub: int) -> str:
     """codes array<int>: per subspace, argmin centroid by (sq-L2, cid) over
     the packed codebook — pure per-row codegen, same shuffle-free shape as
     _KM_ASSIGN."""
-    dist = (
-        f"aggregate(zip_with(slice(qv, j * {sub} + 1, {sub}), c.cq,"
-        " (a, b) -> (a - b) * (a - b)), cast(0 as bigint), (s, v) -> s + v)"
-    )
     return (
         f"transform(sequence(0, {m - 1}), j -> "
         f"array_min(transform(filter(_cb, c -> c.j = j), "
-        f"c -> struct({dist} as d, c.cid as cid))).cid)"
+        f"c -> struct({_pq_sqdist('j', sub)} as d, c.cid as cid))).cid)"
+    )
+
+
+def _pq_encode(q: DataFrame, packed: DataFrame, m: int, sub: int) -> DataFrame:
+    """(vec_id, codes) of each row of `q` (carrying `qv`)."""
+    return q.crossJoin(F.broadcast(packed)).select(
+        "vec_id", F.expr(_pq_code_expr(m, sub)).alias("codes")
+    )
+
+
+def _pq_table(sub: int) -> Column:
+    """A query row's dense ADC table dt[j * n_cent + cid] = sqL2(q_j, c_jcid):
+    _cb is (j, cid)-sorted, so transform keeps that order by construction."""
+    return F.expr(f"transform(_cb, c -> {_pq_sqdist('c.j', sub)})").alias("dt")
+
+
+def _adc_expr(dt: str, m: int, n_cent: int) -> str:
+    """ADC distance of a row's `codes`: m lookups into the dense table `dt`."""
+    return (
+        f"aggregate(sequence(0, {m - 1}), cast(0 as bigint), (s, j) -> "
+        f"s + element_at({dt}, j * {n_cent} + element_at(codes, j + 1) + 1))"
     )
 
 
@@ -987,48 +920,19 @@ def pq_topk_adc(
     an approximation of true distance (that is the PQ trade) — the recall
     test pins it against the exact quantized-L2 ranking.
     Output: rank, vec_id, adc."""
-    from spatialflink_spark.session import spread
-
-    d = len(emb.select("embedding").first()["embedding"])
-    sub = d // m
-    packed = _pq_packed(
-        codebooks if codebooks is not None
-        else pq_codebooks(emb, m, n_cent, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    )
-    # query row -> dense ADC table: dt[j * n_cent + cid] = sqL2(q_j, c_jcid)
-    dist = (
-        f"aggregate(zip_with(slice(qv, c.j * {sub} + 1, {sub}), c.cq,"
-        " (a, b) -> (a - b) * (a - b)), cast(0 as bigint), (s, v) -> s + v)"
-    )
+    sub = _pq_sub(emb, m)
+    packed = _pq_fit(emb, codebooks, m, n_cent, iters)
+    base = _km_base(emb, "vec_id")
     qrow = (
         base.where(F.col("vec_id") == QUERY_VEC_ID)
         .crossJoin(F.broadcast(packed))
-        .select(
-            # _cb is sorted by (j, cid), so transform preserves the dense
-            # j * n_cent + cid order by construction
-            F.expr(f"transform(_cb, c -> {dist})").alias("dt")
-        )
+        .select(_pq_table(sub))
     )
-    coded = (
-        base.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(packed))
-        .select("vec_id", F.expr(_pq_code_expr(m, sub)).alias("codes"))
-    )
+    coded = _pq_encode(base.where(F.col("vec_id") != QUERY_VEC_ID), packed, m, sub)
     scored = coded.crossJoin(F.broadcast(qrow)).select(
-        "vec_id",
-        F.expr(
-            f"aggregate(sequence(0, {m - 1}), cast(0 as bigint), (s, j) -> "
-            f"s + element_at(dt, j * {n_cent} + element_at(codes, j + 1) + 1))"
-        ).alias("adc"),
+        "vec_id", F.expr(_adc_expr("dt", m, n_cent)).alias("adc")
     )
-    top = scored.orderBy(F.col("adc").asc(), F.col("vec_id").asc()).limit(k)
-    return top.withColumn(
-        "rank",
-        F.expr("row_number() OVER (ORDER BY adc ASC, vec_id ASC)").cast("int"),
-    ).select("rank", "vec_id", "adc")
+    return _topk_ranked(scored, k, "adc", desc=False, payload=())
 
 
 def build_ivfpq_index(
@@ -1064,23 +968,13 @@ def build_ivfpq_index(
     coarse.write.mode("overwrite").parquet(f"{path}/centroids")
     cb = pq_codebooks(emb, m, pq_k, iters).localCheckpoint(eager=False)
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-    from spatialflink_spark.session import spread
-
-    d = len(emb.select("embedding").first()["embedding"])
-    sub = d // m
-    base = spread(emb).select(
-        "vec_id", "label", F.expr(_km_quant("embedding")).alias("qv")
-    )
+    sub = _pq_sub(emb, m)
+    base = _km_base(emb, "vec_id", "label")
     base = base.localCheckpoint(eager=False)  # feeds corpus AND qv sidecar
-    assigned = (
-        base.crossJoin(F.broadcast(_packed_centroids(coarse)))
-        .crossJoin(F.broadcast(_pq_packed(cb)))
-        .select(
-            "vec_id",
-            "label",
-            F.expr(_pq_code_expr(m, sub)).alias("codes"),
-            F.expr(_KM_ASSIGN).alias("cid"),
-        )
+    assigned = _km_assign(
+        base.crossJoin(F.broadcast(_pq_packed(cb))),
+        _packed_centroids(coarse),
+        ("vec_id", "label", F.expr(_pq_code_expr(m, sub)).alias("codes")),
     )
     assigned.write.mode("overwrite").partitionBy("cid").parquet(
         f"{path}/corpus"
@@ -1097,33 +991,17 @@ def search_ivfpq_index(
     pq_k: int = PQ_K,
 ) -> DataFrame:
     """SEARCH over a persisted IVF+PQ index: probe cids are ranked
-    DRIVER-SIDE over the tiny coarse table (python bigints — exact), the
-    ADC distance table is built DRIVER-SIDE from the persisted codebooks
-    (exact integers again) and inlined as one literal array, and the only
-    corpus-wide work is the pruned scan of the probed cid partitions plus
-    m array lookups per row. Full probe == pq_topk_adc exactly."""
+    DRIVER-SIDE over the tiny coarse table (_probe_cids), the ADC distance
+    table is built DRIVER-SIDE from the persisted codebooks (exact integers
+    again) and inlined as one literal array, and the only corpus-wide work
+    is the pruned scan of the probed cid partitions plus m array lookups per
+    row. Full probe == pq_topk_adc exactly."""
     corpus = spark.read.parquet(f"{path}/corpus")
-    qrows = (
-        spark.read.parquet(f"{path}/qv")
-        .where(F.col("vec_id") == QUERY_VEC_ID)
-        .select("qv")
-        .collect()
-    )
-    if not qrows:
-        raise ValueError(
-            f"search_ivfpq_index: query vec_id {QUERY_VEC_ID} not in {path}"
-        )
-    qv = [int(v) for v in qrows[0]["qv"]]
+    qv = [int(v) for v in _index_query(spark.read.parquet(f"{path}/qv"), ("qv",), path)["qv"]]
     sub = len(qv) // m
-    cents = spark.read.parquet(f"{path}/centroids").collect()
-    ranked = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, row["cq"])), int(row["cid"]))
-        for row in cents
-    )
-    probed_cids = [cid for _, cid in ranked[:n_probe]]
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    probed_cids = _probe_cids(spark, path, qv, n_probe)
     dt = [0] * (m * pq_k)
-    for row in cb:
+    for row in spark.read.parquet(f"{path}/codebooks").collect():
         j, cid = int(row["j"]), int(row["cid"])
         qs = qv[j * sub : (j + 1) * sub]
         dt[j * pq_k + cid] = sum(
@@ -1133,40 +1011,22 @@ def search_ivfpq_index(
     cand = (
         corpus.where(F.col("cid").isin(probed_cids))
         .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select(
-            "vec_id",
-            F.expr(
-                f"aggregate(sequence(0, {m - 1}), cast(0 as bigint), (s, j) -> "
-                f"s + element_at(array({dt_lit}), "
-                f"j * {pq_k} + element_at(codes, j + 1) + 1))"
-            ).alias("adc"),
-        )
+        .select("vec_id", F.expr(_adc_expr(f"array({dt_lit})", m, pq_k)).alias("adc"))
     )
-    top = cand.orderBy(F.col("adc").asc(), F.col("vec_id").asc()).limit(k)
-    return top.withColumn(
-        "rank",
-        F.expr("row_number() OVER (ORDER BY adc ASC, vec_id ASC)").cast("int"),
-    ).select("rank", "vec_id", "adc")
+    return _topk_ranked(cand, k, "adc", desc=False, payload=())
 
 
-def batch_ann_recall(emb: DataFrame, k: int = DEFAULT_K) -> DataFrame:
-    """Per-query recall@k of the multi-probe batch ANN against the exact
-    batch ranker — the calibration signal an ANN deployment monitors when
-    tuning (bits, hamming): recall = |ANN top-k ∩ exact top-k| / k.
-    Composes the two existing batch ops; both inputs are bounded
-    (|queries| x k rows), so the hit join and per-query counts are
+def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall@k of the `approx` rank list against the `exact` one:
+    recall = |approx top-k ∩ exact top-k| / |exact top-k|. Both inputs are
+    bounded (|queries| x k rows), so the hit join and per-query counts are
     negligible next to the rankers themselves. All-integer counts, one
     final rounded division. Output: q_id, n_exact, n_hit, recall."""
     # MATERIALIZE: exact feeds both the hit join and the per-query base —
     # un-checkpointed, the whole exact ranker re-evaluates per consumer
-    # (the multi-consumer invariant, CLAUDE.md); the relation is
-    # |queries| x k rows
-    exact = (
-        cosine_topk_batch(emb, k=k)
-        .select("q_id", "vec_id")
-        .localCheckpoint(eager=False)
-    )
-    ann = cosine_topk_batch_ann(emb, k=k).select("q_id", "vec_id")
+    # (the multi-consumer invariant, CLAUDE.md)
+    exact = exact.select("q_id", "vec_id").localCheckpoint(eager=False)
+    ann = approx.select("q_id", "vec_id")
     # explicit broadcasts: both rank lists are |Q| x k BY CONSTRUCTION, but
     # the checkpointed side has no stats, so the planner would fall back to
     # a sort-merge join (two sorted exchanges for a bounded relation)
@@ -1184,6 +1044,13 @@ def batch_ann_recall(emb: DataFrame, k: int = DEFAULT_K) -> DataFrame:
             "round(cast(coalesce(_h, 0) as double) / n_exact, 6)"
         ).alias("recall"),
     )
+
+
+def batch_ann_recall(emb: DataFrame, k: int = DEFAULT_K) -> DataFrame:
+    """Per-query recall@k of the multi-probe batch ANN against the exact
+    batch ranker — the calibration signal an ANN deployment monitors when
+    tuning (bits, hamming). Output: q_id, n_exact, n_hit, recall."""
+    return _recall_at_k(cosine_topk_batch(emb, k=k), cosine_topk_batch_ann(emb, k=k))
 
 
 PROTO_DROP_BP = 2500  # drop the most-prototypical quarter of each cluster
@@ -1212,30 +1079,8 @@ def prototypicality(
     n_centroids grows with the corpus so per-cluster partitions stay
     bounded (the paper's regime: cluster count scales, cluster size
     doesn't). Output: vec_id, cid, d2, rank_c, keep."""
-    from spatialflink_spark.session import spread
-
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    )
-    assigned = (
-        base.crossJoin(F.broadcast(packed))
-        .select(
-            "vec_id",
-            F.expr(
-                f"array_min(transform(_cents, c -> struct({_KM_CDIST} as d,"
-                " c.cid as cid)))"
-            ).alias("_a"),
-        )
-        .select(
-            "vec_id",
-            F.expr("cast(_a.cid as int)").alias("cid"),
-            F.expr("_a.d").alias("d2"),
-        )
-    )
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    assigned = _km_assign(_km_base(emb, "vec_id"), packed, ("vec_id",), dist="d2")
     ranked = assigned.select(
         "*",
         F.expr(
@@ -1281,43 +1126,22 @@ def pq_topk_batch(
     (any bucketing is answer-invisible — the _batch_topk_two_stage proof).
     Everything after quantization is exact bigint. Output: q_id, rank,
     vec_id, adc."""
-    from spatialflink_spark.session import spread
-
-    d = len(emb.select("embedding").first()["embedding"])
-    sub = d // m
-    packed = _pq_packed(
-        codebooks if codebooks is not None
-        else pq_codebooks(emb, m, n_cent, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    ).localCheckpoint(eager=False)  # feeds the coded corpus AND the queries
-    coded = base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", F.expr(_pq_code_expr(m, sub)).alias("codes")
-    )
-    dist = (
-        f"aggregate(zip_with(slice(qv, c.j * {sub} + 1, {sub}), c.cq,"
-        " (a, b) -> (a - b) * (a - b)), cast(0 as bigint), (s, v) -> s + v)"
-    )
+    sub = _pq_sub(emb, m)
+    packed = _pq_fit(emb, codebooks, m, n_cent, iters)
+    # feeds the coded corpus AND the queries
+    base = _km_base(emb, "vec_id").localCheckpoint(eager=False)
     qdt = (
         base.where(F.col("vec_id") % query_mod == 0)
         .crossJoin(F.broadcast(packed))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            # _cb is (j, cid)-sorted -> dense j * n_cent + cid layout
-            F.expr(f"transform(_cb, c -> {dist})").alias("dt"),
-        )
+        .select(F.col("vec_id").alias("q_id"), _pq_table(sub))
     )
-    scored = coded.join(
+    scored = _pq_encode(base, packed, m, sub).join(
         F.broadcast(qdt), F.col("vec_id") != F.col("q_id")
     ).select(
         "q_id",
         "vec_id",
         F.expr("element_at(codes, 1)").alias("bucket"),
-        F.expr(
-            f"aggregate(sequence(0, {m - 1}), cast(0 as bigint), (s, j) -> "
-            f"s + element_at(dt, j * {n_cent} + element_at(codes, j + 1) + 1))"
-        ).alias("adc"),
+        F.expr(_adc_expr("dt", m, n_cent)).alias("adc"),
     )
     return _batch_topk_two_stage(scored, k, "adc", desc=False, payload=())
 
@@ -1331,11 +1155,8 @@ def l2_topk_batch(
     cut as cosine_topk_batch (bucket = vec_id mod 16: any deterministic
     bucketing is answer-invisible). Exact bigint distances end-to-end.
     Output: q_id, rank, vec_id, d2."""
-    from spatialflink_spark.session import spread
-
-    base = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    ).localCheckpoint(eager=False)  # feeds corpus AND query sides
+    # feeds corpus AND query sides
+    base = _km_base(emb, "vec_id").localCheckpoint(eager=False)
     q = base.where(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("q_id"), F.col("qv").alias("q_qv")
     )
@@ -1356,29 +1177,10 @@ def pq_batch_recall(
 ) -> DataFrame:
     """Per-query recall@k of the PQ/ADC batch ranker against the exact
     quantized-L2 ranker — the code-loss calibration an IVF+PQ deployment
-    monitors when sizing (m, n_cent). Mirrors batch_ann_recall's shape:
-    both rank lists are |Q| x k, the exact list is materialized once for
-    its two consumers. Output: q_id, n_exact, n_hit, recall."""
-    exact = (
-        l2_topk_batch(emb, k=k)
-        .select("q_id", "vec_id")
-        .localCheckpoint(eager=False)
-    )
-    ann = pq_topk_batch(emb, k=k, codebooks=codebooks).select("q_id", "vec_id")
-    # bounded |Q| x k sides -> explicit broadcast (see batch_ann_recall)
-    hits = exact.join(F.broadcast(ann), ["q_id", "vec_id"]).groupBy("q_id").agg(
-        F.expr("cast(count(1) as bigint)").alias("_h")
-    )
-    base = exact.groupBy("q_id").agg(
-        F.expr("cast(count(1) as bigint)").alias("n_exact")
-    )
-    return base.join(F.broadcast(hits), "q_id", "left").select(
-        "q_id",
-        "n_exact",
-        F.expr("cast(coalesce(_h, 0) as bigint)").alias("n_hit"),
-        F.expr(
-            "round(cast(coalesce(_h, 0) as double) / n_exact, 6)"
-        ).alias("recall"),
+    monitors when sizing (m, n_cent). Output: q_id, n_exact, n_hit,
+    recall."""
+    return _recall_at_k(
+        l2_topk_batch(emb, k=k), pq_topk_batch(emb, k=k, codebooks=codebooks)
     )
 
 
@@ -1406,18 +1208,9 @@ def cluster_quality_profile(
     before summing (order-insensitive), one rounded division per mean.
     Output: cid, n_docs, n_words, mean_quality, keep_rate."""
     from spatialflink_spark.operators.text import with_quality_filter
-    from spatialflink_spark.session import spread
 
-    packed = _packed_centroids(
-        centroids if centroids is not None
-        else kmeans_centroids(emb, n_centroids, iters)
-    ).localCheckpoint(eager=False)
-    base = spread(emb).select(
-        "vec_id", F.expr(_km_quant("embedding")).alias("qv")
-    )
-    assigned = base.crossJoin(F.broadcast(packed)).select(
-        "vec_id", F.expr(f"cast({_KM_ASSIGN} as int)").alias("cid")
-    )
+    packed = _km_packed(emb, centroids, n_centroids, iters)
+    assigned = _km_assign(_km_base(emb, "vec_id"), packed, ("vec_id",))
     q = (
         with_quality_filter(
             spread(docs).select("doc_id", "text")
