@@ -1024,7 +1024,6 @@ def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
     final rounded division. Output: q_id, n_exact, n_hit, recall."""
     # MATERIALIZE: exact feeds both the hit join and the per-query base —
     # un-checkpointed, the whole exact ranker re-evaluates per consumer
-    # (the multi-consumer invariant, CLAUDE.md)
     exact = exact.select("q_id", "vec_id").localCheckpoint(eager=False)
     ann = approx.select("q_id", "vec_id")
     # explicit broadcasts: both rank lists are |Q| x k BY CONSTRUCTION, but
