@@ -916,10 +916,11 @@ def q_pack_bins_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_knn_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second end-to-end Structured Streaming path in the gate: watermarked
-    tumbling kNN — per-(window, query, cell) k-bounded candidate heap in the
-    state store (O(k) state, stateful.knn_topk_stateful), batch-side final
-    merge per emitted micro-batch, through the exactly-once sink. Oracle =
-    batch kNN over windows the final watermark closed."""
+    tumbling kNN — a built-in append-mode aggregation keeps each candidate
+    doc's min (dist, seq_no) per (window, query) in the state store
+    (pipeline.stream_knn_topk, no Python worker), batch-side final rank and
+    cut at k per emitted micro-batch, through the exactly-once sink. Oracle
+    = batch kNN over windows the final watermark closed."""
     import tempfile
 
     from spatialflink_spark.sources.streams import (

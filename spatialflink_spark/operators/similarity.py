@@ -135,13 +135,17 @@ def _sign_bucket_topk(emb: DataFrame, k: int, bits: int, probe: str) -> DataFram
     """Single-query sign-bucket ANN: the candidates are the corpus rows
     whose `bucket` satisfies the SQL `probe` predicate against the query's
     `q_bucket`; exact cosine top-k among them (_probe_topk)."""
-    b = emb.withColumn("bucket", bucket_expr("embedding", bits))
-    qb = b.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("bucket").alias("q_bucket"),
+    qb = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        bucket_expr("embedding", bits).alias("q_bucket"),
         F.col("embedding").alias("q_emb"),
         F.expr(_norm_expr("embedding")).alias("_snq"),
     )
-    cand = b.where(F.col("vec_id") != QUERY_VEC_ID).join(F.broadcast(qb), F.expr(probe))
+    # spread: a single-file embeddings scan otherwise buckets and scores
+    # every candidate serially on one core
+    corpus = spread(emb.where(F.col("vec_id") != QUERY_VEC_ID)).withColumn(
+        "bucket", bucket_expr("embedding", bits)
+    )
+    cand = corpus.join(F.broadcast(qb), F.expr(probe))
     return _probe_topk(cand, k)
 
 

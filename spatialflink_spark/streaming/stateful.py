@@ -1,7 +1,8 @@
 """Custom per-key stateful operators — applyInPandasWithState.
 
-The four reference operators that have NO declarative Spark equivalent
-(everything else in this engine is built-in aggregation):
+The three reference operators that have NO declarative Spark equivalent
+(everything else in this engine is built-in aggregation; the windowed kNN's
+per-doc min is a built-in streaming aggregation, pipeline.stream_knn_topk):
 
 - tstats_stateful: per-trajectory running stats with the out-of-order drop
   guard — ValueState keyed by objID (tStats/TStatsQuery.java:44-145, guard
@@ -14,12 +15,6 @@ The four reference operators that have NO declarative Spark equivalent
   (countWindow(size[, slide]), PointTAggregateQuery.java:83-89) — no SS
   primitive exists, so the state carries a per-key arrival counter plus a
   ring buffer of the last `size` values.
-- knn_topk_stateful: per-(query, cell) k-bounded candidate heap for the
-  windowed kNN — the exact analog of the reference's per-cell size-k
-  PriorityQueue (knn/PointPointKNNQuery.java:132-201). State per key is
-  O(k x open_windows), NOT O(candidates): the round-2 collect_list design
-  accumulated every radius-qualifying row per (window, query, cell) and was
-  the one remaining unbounded-state path at 10^12-sequence scale.
 
 All three receive Arrow record batches per key group (vectorized transfer);
 the per-key python work is O(rows in batch) numpy/pandas ops, not per-row
@@ -231,117 +226,6 @@ def make_count_window_fn(size: int, slide: int):
         ])
 
     return _fn
-
-
-KNN_STATE = "cands array<array<bigint>>"  # flat [ws, dist, doc_id, seq_no]
-KNN_OUT = (
-    "ws bigint, q_id string, k int, cell int, doc_id bigint, seq_no int, "
-    "dist int"
-)
-
-
-def make_knn_topk_fn(tumbling_s: int):
-    """Per-(q_id, k, cell) incrementally maintained top-k doc heap per open
-    tumbling window — the reference's per-cell size-k max-heap
-    (knn/PointPointKNNQuery.java:132-201), with per-doc dedup-keep-min folded
-    in (the merge semantics of KNNQuery.java:226-238).
-
-    Maintenance invariant: the heap holds the <= k best DOCS by (dist,
-    doc_id), each at its minimum (dist, seq_no). Eviction is safe because the
-    heap never shrinks below k once full: a doc evicted as the worst of k can
-    only re-enter with a strictly better (dist, doc_id) than the current
-    worst, and a doc whose min was evicted can never belong to the cell's
-    final top-k (everything retained beats it). Windows emit when the
-    watermark passes their end; an event-time timeout is registered at
-    (min open window end)*1000 - 1 ms so the availableNow flush batch emits
-    the final closed windows (timeout fires when watermark >= window end,
-    matching the built-in append-mode closure rule)."""
-
-    def _fn(key, pdf_iter, state: GroupState):
-        q_id, k, cell = key
-        k, cell = int(k), int(cell)
-        wins: dict[int, dict[int, tuple[int, int]]] = {}
-        if state.exists:
-            (flat,) = state.get
-            for ws, dist, doc, seq in flat:
-                wins.setdefault(int(ws), {})[int(doc)] = (int(dist), int(seq))
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        t = tumbling_s
-        for pdf in pdf_iter:
-            for ts, doc, seq, dist in zip(
-                pdf["ts_s"].to_numpy(),
-                pdf["doc_id"].to_numpy(),
-                pdf["seq_no"].to_numpy(),
-                pdf["dist"].to_numpy(),
-            ):
-                ws = int(ts) // t * t
-                if ws + t <= wm_s:
-                    continue  # late row for an already-closed window
-                heap = wins.setdefault(ws, {})
-                doc = int(doc)
-                cand = (int(dist), int(seq))
-                cur = heap.get(doc)
-                if cur is None or cand < cur:
-                    heap[doc] = cand
-                if len(heap) > k:
-                    worst = max(heap, key=lambda d: (heap[d][0], d))
-                    del heap[worst]
-        out = []
-        for ws in sorted(w for w in wins if w + t <= wm_s):
-            for doc, (dist, seq) in sorted(wins.pop(ws).items()):
-                out.append(
-                    {
-                        "ws": ws,
-                        "q_id": q_id,
-                        "k": k,
-                        "cell": cell,
-                        "doc_id": doc,
-                        "seq_no": seq,
-                        "dist": dist,
-                    }
-                )
-        if wins:
-            # O(k) bound per open window — the whole point of this operator
-            assert all(len(h) <= k for h in wins.values())
-            state.update(
-                ([[ws, v[0], doc, v[1]] for ws, h in wins.items()
-                  for doc, v in h.items()],)
-            )
-            state.setTimeoutTimestamp((min(wins) + t) * 1000 - 1)
-        else:
-            state.remove()
-        yield pd.DataFrame(
-            out,
-            columns=["ws", "q_id", "k", "cell", "doc_id", "seq_no", "dist"],
-        )
-
-    return _fn
-
-
-def knn_topk_stateful(cand_stream: DataFrame, tumbling_s: int) -> DataFrame:
-    """Streaming per-(query, cell) windowed top-k with O(k) state. Input:
-    watermarked candidate rows (event_ts, ts_s, q_id, k, cell, doc_id,
-    seq_no, dist). Output: one row per surviving (window, query, cell, doc)
-    at window close — append mode; compose with pipeline.finalize_knn for
-    the bounded global merge."""
-    from spatialflink_spark.session import ensure_pyfiles
-
-    ensure_pyfiles(cand_stream.sparkSession)
-    return (
-        # keep the watermarked event_ts column through the select (repo
-        # invariant: getCurrentWatermarkMs throws without it)
-        cand_stream.select(
-            "event_ts", "ts_s", "q_id", "k", "cell", "doc_id", "seq_no", "dist"
-        )
-        .groupBy("q_id", "k", "cell")
-        .applyInPandasWithState(
-            make_knn_topk_fn(tumbling_s),
-            outputStructType=KNN_OUT,
-            stateStructType=KNN_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def count_windows(stream: DataFrame, size: int, slide: int | None = None) -> DataFrame:

@@ -488,6 +488,28 @@ def test_static_query_tables_plan_as_local_scans(spark, tmp_path):
         assert "ExistingRDD" not in s, (name, s)
 
 
+def test_stream_knn_plans_as_jvm_hash_aggregate(spark, tmp_path):
+    """The stream kNN's per-doc min is one built-in streaming aggregation:
+    no Python state operator, one state store, and the packed bigint key
+    keeps every aggregate a HashAggregate (a min over a struct would plan
+    SortAggregates); the query cells stay a LocalTableScan."""
+    from spatialflink_spark.config import DEFAULT_QUERY_POINTS
+    from spatialflink_spark.gate import C
+    from spatialflink_spark.sources.streams import (
+        read_sequences_stream,
+        stage_replay_files,
+    )
+    from spatialflink_spark.streaming.pipeline import stream_knn_topk
+
+    stage_replay_files(spark, SF_SMALL, str(tmp_path), n_batches=2)
+    stream = read_sequences_stream(spark, str(tmp_path), C.allowed_lateness_s)
+    s = plans.simple_plan(stream_knn_topk(stream, C, DEFAULT_QUERY_POINTS))
+    assert "FlatMapGroupsInPandasWithState" not in s, s
+    assert s.count("StateStoreSave") == 1, s
+    assert "HashAggregate" in s and "SortAggregate" not in s, s
+    assert "LocalTableScan" in s, s
+
+
 def test_local_table_matches_create_dataframe(spark):
     """session.local_table keeps the DDL schema (names, types, nullability)
     and the rows that spark.createDataFrame(<list>, ddl) gives — checked on
@@ -531,21 +553,20 @@ def test_knn_merge_single_exchange(spark):
     groupBy and the rank window both reuse that exchange."""
     from spatialflink_spark.session import local_table
     from spatialflink_spark.streaming.pipeline import finalize_knn
-    from spatialflink_spark.streaming.stateful import KNN_OUT
 
     cut = local_table(
         spark,
         [
-            (0, "q", 2, 1, 7, 0, 3),
-            (0, "q", 2, 2, 7, 1, 1),
-            (0, "q", 2, 2, 8, 0, 2),
-            (0, "q", 2, 3, 9, 0, 1),
+            (0, "q", 2, 7, 3, 0),
+            (0, "q", 2, 7, 1, 1),
+            (0, "q", 2, 8, 2, 0),
+            (0, "q", 2, 9, 1, 0),
         ],
-        KNN_OUT,
+        "ws bigint, q_id string, k int, doc_id bigint, dist int, seq_no int",
     )
     df = finalize_knn(cut)
     assert plans.exchange_count(df) == 1, plans.simple_plan(df)
-    # doc 7 keeps its min (dist, seq_no) across cells; ties break on doc_id
+    # doc 7 keeps its min (dist, seq_no); ties break on doc_id
     assert [tuple(r) for r in df.orderBy("rank").collect()] == [
         (0, "q", 1, 7, 1, 1),
         (0, "q", 2, 9, 0, 1),
@@ -628,10 +649,12 @@ def test_geometry_operator_plan(spark, family, name):
 # - batch:  per-query two-stage cut, every window partitioned by q_id
 # - assign: inverted-file assignment through similarity._km_assign
 # - probe:  single-query candidate probe, corpus norm only above the join
+# - spread: the single-file corpus scan is spread over the cores
+#           (RoundRobinPartitioning) before the candidate work
 SIMILARITY_OPS = {
     "cosine_topk": ("topk",),
-    "cosine_topk_ivf": ("topk", "probe"),
-    "cosine_topk_ivf_multiprobe": ("topk", "probe"),
+    "cosine_topk_ivf": ("topk", "probe", "spread"),
+    "cosine_topk_ivf_multiprobe": ("topk", "probe", "spread"),
     "cosine_topk_ivf_kmeans": ("topk", "probe", "assign"),
     "pq_topk_adc": ("topk",),
     "cosine_topk_batch": ("batch",),
@@ -688,6 +711,8 @@ def test_similarity_operator_plan(spark, monkeypatch, name):
     - the single-query probes compute the corpus norm only for probed
       candidates: no sqrt(aggregate(...)) on the streamed side of the
       probe join, and the cosine above it
+    - the sign-bucket probes spread the corpus scan (session.spread), so a
+      single-file embeddings table does not bucket and score in one task
     """
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -729,6 +754,8 @@ def test_similarity_operator_plan(spark, monkeypatch, name):
             assert "BroadcastNestedLoopJoin" in p and "BroadcastExchange" in p, p
             assert "CartesianProduct" not in p, p
             assert "SortMergeJoin" not in p, p
+    if "spread" in props:
+        assert "RoundRobinPartitioning" in s, s
     if "probe" in props:
         above, left = _probe_join_sides(plans.formatted_plan(df))
         assert not any("SQRT(aggregate(" in n for n in left), left

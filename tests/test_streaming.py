@@ -324,30 +324,31 @@ def test_sink_merge_on_read(spark, replay_dir, tmp_path):
 
 
 def test_stream_knn_matches_batch_closed_windows(spark, replay_dir, tmp_path):
-    """Streaming per-cell k-bounded heap + batch-side final merge == batch
-    kNN for windows the final watermark closed; runs on the RocksDB state
-    store. Also proves the O(k) state bound: every emitted (window, query,
-    cell) group carries <= k rows, and the state store never holds more rows
-    than (query, cell) keys."""
+    """Streaming per-(window, query, doc) min aggregation + batch-side final
+    merge == batch kNN for windows the final watermark closed; runs on the
+    RocksDB state store. Also checks the state exactly: each (window,
+    query, doc) is emitted once, and after the last micro-batch the store
+    holds one row per distinct candidate (window, query, doc) in the
+    windows the final watermark leaves open — nothing of a closed window."""
+    from pyspark.sql import functions as F
+
+    from spatialflink_spark.operators.knn import knn_windowed
+    from spatialflink_spark.operators.range_query import range_query
     from spatialflink_spark.streaming.pipeline import (
         finalize_knn,
         stream_knn_topk,
     )
 
     stream = read_sequences_stream(spark, replay_dir, C.allowed_lateness_s)
-    # tumbling kNN (stateful top-k); batch expectation uses the same window
+    # tumbling kNN; batch expectation uses the same window
     collected = stream_knn_topk(stream, C, DEFAULT_QUERY_POINTS)
     sink = ExactlyOnceSink(str(tmp_path / "out"), key_cols=("ws", "q_id"))
+    emitted = []
 
     def fb(df, bid):
         df.persist()
         try:
-            pdf = df.toPandas()
-            if len(pdf):
-                g = pdf.groupby(["ws", "q_id", "cell"])
-                sizes = g.size()
-                ks = g["k"].first()
-                assert (sizes <= ks).all(), "per-(window,query,cell) rows > k"
+            emitted.append(df.select("ws", "q_id", "doc_id").toPandas())
             sink.write_batch(finalize_knn(df), bid)
         finally:
             df.unpersist()
@@ -381,25 +382,26 @@ def test_stream_knn_matches_batch_closed_windows(spark, replay_dir, tmp_path):
         any(k.startswith("rocksdb") for k in op.get("customMetrics", {}))
         for op in ops
     ), f"RocksDB provider not active: {ops}"
-    # O(k) state: one state row per live (q_id, k, cell) key, each holding
-    # <= k x open_windows entries — row count bounded by the STATIC
-    # query-cell table, independent of candidate volume
-    from spatialflink_spark.operators.range_query import query_cells_df
+    out = pd.concat(emitted)
+    assert len(out) and not out.duplicated().any(), "a (ws, q_id, doc_id) emitted twice"
 
-    n_keys = query_cells_df(spark, C.grid, DEFAULT_QUERY_POINTS).count()
-    assert all(op["numRowsTotal"] <= n_keys for op in ops), (
-        f"state rows exceed (query, cell) key count {n_keys}: {ops}"
+    seq_t = sequences(spark, SF_SMALL).withColumn(
+        "ws", F.expr(f"cast(floor(ts_s / {C.tumbling_s}) * {C.tumbling_s} as bigint)")
     )
+    # exact eviction: the state left after the last micro-batch is one row
+    # per candidate (window, query, doc) of the still-open windows
+    wm_s = pd.Timestamp(progress["eventTime"]["watermark"]).value // 10**9
+    open_cands = (
+        range_query(seq_t, C.grid, DEFAULT_QUERY_POINTS)
+        .where(F.col("ws") + C.tumbling_s > wm_s)
+        .select("ws", "q_id", "doc_id")
+        .distinct()
+        .count()
+    )
+    assert [op["numRowsTotal"] for op in ops] == [open_cands], (wm_s, ops)
     got = sink.read_committed(spark).toPandas()
 
     # batch truth on tumbling windows
-    from spatialflink_spark.operators.knn import knn_windowed
-
-    seq_t = sequences(spark, SF_SMALL).withColumn(
-        "ws", __import__("pyspark.sql.functions", fromlist=["expr"]).expr(
-            f"cast(floor(ts_s / {C.tumbling_s}) * {C.tumbling_s} as bigint)"
-        )
-    )
     exp = knn_windowed(seq_t, C.grid, DEFAULT_QUERY_POINTS).toPandas()
     max_ts = sequences(spark, SF_SMALL).agg({"ts_s": "max"}).collect()[0][0]
     closed = exp[exp["ws"] + C.tumbling_s <= max_ts - C.allowed_lateness_s]
@@ -409,6 +411,52 @@ def test_stream_knn_matches_batch_closed_windows(spark, replay_dir, tmp_path):
     assert len(a) == len(b)
     for c in ["ws", "q_id", "rank", "doc_id", "seq_no", "dist"]:
         assert (a[c].values == b[c].values).all(), c
+
+
+def test_packed_dist_seq_key_matches_struct_min(spark):
+    """The stream kNN's packed bigint min (pipeline.DIST_SEQ_KEY, decoded by
+    KEY_DIST / KEY_SEQ) picks the same (dist, seq_no) as
+    min(struct(dist, seq_no)) — seeded random groups over the whole
+    non-negative int dist and int seq_no ranges, the boundary values in
+    every group, all checked in one collect."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from spatialflink_spark.session import local_table
+    from spatialflink_spark.streaming.pipeline import DIST_SEQ_KEY, KEY_DIST, KEY_SEQ
+
+    i32 = 2**31
+    dists = [0, 1, i32 - 2, i32 - 1]
+    seqs = [-i32, -i32 + 1, -1, 0, 1, i32 - 1]
+    rng = random.Random(20261019)
+    rows = []
+    for g in range(300):
+        n = rng.randint(1, 6)
+        for _ in range(n):
+            d = rng.choice(dists) if rng.random() < 0.5 else rng.randrange(i32)
+            s = rng.choice(seqs) if rng.random() < 0.5 else rng.randrange(-i32, i32)
+            rows.append((g, d, s))
+    # every boundary pair, alone and against each other
+    rows += [(300 + i, d, s) for i, (d, s) in enumerate((d, s) for d in dists for s in seqs)]
+    rows += [(400, d, s) for d in dists for s in seqs]
+    rows += [(401, d, s) for d in dists[:2] for s in seqs]
+    t = local_table(spark, rows, "g int, dist int, seq_no int")
+    got = (
+        t.groupBy("g")
+        .agg(
+            F.min(F.struct("dist", "seq_no")).alias("_m"),
+            F.min(F.expr(DIST_SEQ_KEY)).alias("_key"),
+        )
+        .select(
+            "g", "_m.dist", "_m.seq_no",
+            F.expr(KEY_DIST).alias("kd"), F.expr(KEY_SEQ).alias("ks"),
+        )
+        .collect()
+    )
+    assert len(got) == 300 + len(dists) * len(seqs) + 2
+    bad = [r for r in got if (r.dist, r.seq_no) != (r.kd, r.ks)]
+    assert not bad, bad[:5]
 
 
 def test_stream_stream_join_matches_batch(spark, replay_dir, tmp_path):
@@ -856,10 +904,10 @@ def test_heatmap_state_plateaus_under_eviction(spark, tmp_path):
 
 
 def test_stream_knn_resume_from_checkpoint(spark, replay_dir, tmp_path):
-    """Kill the stateful top-k kNN stream after its first commit; resume from
-    the same checkpoint (k-heaps + event-time timeouts live in the state
-    store); final sink must equal batch kNN for closed windows with no
-    duplicate keys across the kill/restart boundary."""
+    """Kill the windowed kNN stream after its first commit; resume from the
+    same checkpoint (the per-doc min aggregation state and the watermark
+    live in the checkpoint); final sink must equal batch kNN for closed
+    windows with no duplicate keys across the kill/restart boundary."""
     import time as _time
 
     from spatialflink_spark.streaming.pipeline import finalize_knn, stream_knn_topk
@@ -911,110 +959,6 @@ def test_stream_knn_resume_from_checkpoint(spark, replay_dir, tmp_path):
     assert len(a) == len(b)
     for c in ["ws", "q_id", "rank", "doc_id", "seq_no", "dist"]:
         assert (a[c].values == b[c].values).all(), c
-
-
-def test_knn_topk_heap_property():
-    """Property test of the k-heap maintenance in make_knn_topk_fn (no Spark
-    needed): for ANY arrival order, duplicate-doc pattern and batch split,
-    the incrementally maintained O(k) state must emit exactly the brute-force
-    per-window top-k docs at their per-doc min (dist, seq_no) — the eviction-
-    safety argument (an evicted doc can only re-enter by beating the current
-    worst) checked mechanically across thousands of random streams."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from spatialflink_spark.streaming.stateful import make_knn_topk_fn
-
-    T = 60
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-            self.wm_ms = 0
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v = None
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ts_ms):
-            assert ts_ms > self.wm_ms  # Spark enforces this
-            self.timeout = ts_ms
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        rows=st.lists(
-            st.tuples(
-                st.integers(0, 2),   # window index
-                st.integers(0, 9),   # doc_id
-                st.integers(0, 5),   # seq_no
-                st.integers(0, 20),  # dist
-            ),
-            min_size=1,
-            max_size=60,
-        ),
-        k=st.integers(1, 4),
-        n_chunks=st.integers(1, 4),
-    )
-    def check(rows, k, n_chunks):
-        fn = make_knn_topk_fn(T)
-        state = FakeState()
-        emitted = []
-        step = max(1, -(-len(rows) // n_chunks))
-        for i in range(0, len(rows), step):
-            chunk = rows[i : i + step]
-            pdf = pd.DataFrame(
-                {
-                    "ts_s": [w * T + 5 for w, _, _, _ in chunk],
-                    "doc_id": [d for _, d, _, _ in chunk],
-                    "seq_no": [s for _, _, s, _ in chunk],
-                    "dist": [x for _, _, _, x in chunk],
-                }
-            )
-            emitted.extend(
-                r for out in fn(("q", k, 0), [pdf], state)
-                for r in out.to_dict("records")
-            )
-        state.wm_ms = 10**12  # final watermark: close every window
-        emitted.extend(
-            r for out in fn(("q", k, 0), [], state)
-            for r in out.to_dict("records")
-        )
-        assert not state.exists  # fully flushed
-
-        # brute force: per window, per-doc min (dist, seq), top-k by (dist, doc)
-        from collections import defaultdict
-
-        per_win: dict[int, dict[int, tuple[int, int]]] = defaultdict(dict)
-        for w, d, s, x in rows:
-            ws = w * T
-            cur = per_win[ws].get(d)
-            if cur is None or (x, s) < cur:
-                per_win[ws][d] = (x, s)
-        expect = []
-        for ws, docs in per_win.items():
-            top = sorted(docs.items(), key=lambda it: (it[1][0], it[0]))[:k]
-            for d, (x, s) in top:
-                expect.append(
-                    {"ws": ws, "q_id": "q", "k": k, "cell": 0,
-                     "doc_id": d, "seq_no": s, "dist": x}
-                )
-        key = lambda r: (r["ws"], r["doc_id"])  # noqa: E731
-        assert sorted(emitted, key=key) == sorted(expect, key=key)
-
-    check()
 
 
 def test_stream_decontaminate_matches_batch(spark, replay_dir, tmp_path):
