@@ -1,8 +1,8 @@
 """Custom per-key stateful operators — applyInPandasWithState.
 
 The three reference operators that have NO declarative Spark equivalent
-(everything else in this engine is built-in aggregation; the windowed kNN's
-per-doc min is a built-in streaming aggregation, pipeline.stream_knn_topk):
+(everything else in this engine, the streaming kNN included, is built-in
+aggregation):
 
 - tstats_stateful: per-trajectory running stats with the out-of-order drop
   guard — ValueState keyed by objID (tStats/TStatsQuery.java:44-145, guard

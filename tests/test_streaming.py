@@ -398,6 +398,7 @@ def test_stream_knn_matches_batch_closed_windows(spark, replay_dir, tmp_path):
         .distinct()
         .count()
     )
+    assert open_cands > 0
     assert [op["numRowsTotal"] for op in ops] == [open_cands], (wm_s, ops)
     got = sink.read_committed(spark).toPandas()
 
@@ -417,8 +418,9 @@ def test_packed_dist_seq_key_matches_struct_min(spark):
     """The stream kNN's packed bigint min (pipeline.DIST_SEQ_KEY, decoded by
     KEY_DIST / KEY_SEQ) picks the same (dist, seq_no) as
     min(struct(dist, seq_no)) — seeded random groups over the whole
-    non-negative int dist and int seq_no ranges, the boundary values in
-    every group, all checked in one collect."""
+    non-negative int dist and int seq_no ranges, with the boundary values
+    mixed into them and in groups of their own, all checked in one
+    collect."""
     import random
 
     from pyspark.sql import functions as F
