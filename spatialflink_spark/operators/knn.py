@@ -95,10 +95,8 @@ def two_stage_topk(cand: DataFrame, id_col: str, seq_col: str) -> DataFrame:
 
 def knn_merge(cut: DataFrame) -> DataFrame:
     """Stage 2 of the two-stage kNN, shared by the batch operators (after
-    two_stage_topk) and the streaming pipeline's per-micro-batch merge
-    (pipeline.finalize_knn):
-    per-doc dedup keeping the min (dist, seq_no) ACROSS cells
-    (KNNQuery.java:226-238), then re-rank per (ws, q_id) and cut to k.
+    two_stage_topk): per-doc dedup keeping the min (dist, seq_no) ACROSS
+    cells (KNNQuery.java:226-238), then knn_rank_cut.
 
     `cut` holds per-cell top-k rows (ws, q_id, k, doc_id, dist, seq_no), so
     its input is already <= cells * k rows per (ws, q_id). ONE exchange:
@@ -110,16 +108,27 @@ def knn_merge(cut: DataFrame) -> DataFrame:
         .groupBy("ws", "q_id", "k", "doc_id")
         .agg(F.min(F.struct("dist", "seq_no")).alias("_m"))
     )
-    w_final = Window.partitionBy("ws", "q_id").orderBy(
-        F.col("_m.dist"), F.col("doc_id")
-    )
+    return knn_rank_cut(per_doc, "_m.dist", "_m.seq_no")
+
+
+def knn_rank_cut(
+    per_doc: DataFrame, dist: str = "dist", seq_no: str = "seq_no"
+) -> DataFrame:
+    """The global rank and cut at k: rows already unique per (ws, q_id,
+    doc_id), ranked per (ws, q_id) by (dist, doc_id), keep rank <= k. The
+    end of knn_merge, and the whole merge of the streaming kNN
+    (pipeline.finalize_knn), whose aggregation already emits one row per
+    doc. The rank window reuses a (ws, q_id) partitioning below it, or
+    plans that one exchange itself.
+    Returns (ws, q_id, rank, doc_id, seq_no, dist)."""
+    w_final = Window.partitionBy("ws", "q_id").orderBy(F.col(dist), F.col("doc_id"))
     return (
         per_doc.withColumn("rank", F.row_number().over(w_final))
         .where(F.col("rank") <= F.col("k"))
         .select(
             "ws", "q_id", "rank", "doc_id",
-            F.col("_m.seq_no").alias("seq_no"),
-            F.col("_m.dist").alias("dist"),
+            F.col(seq_no).alias("seq_no"),
+            F.col(dist).alias("dist"),
         )
     )
 

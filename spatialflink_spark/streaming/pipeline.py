@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spatialflink_spark.config import EngineConfig, QueryPoint
-from spatialflink_spark.operators.knn import knn_merge
+from spatialflink_spark.operators.knn import knn_rank_cut
 from spatialflink_spark.operators.range_query import query_cells_df
 from spatialflink_spark.operators.cells import cell_expr
 
@@ -280,11 +280,12 @@ def stream_knn_topk(
 
 
 def finalize_knn(batch_df: DataFrame) -> DataFrame:
-    """Batch-side final merge for stream_knn_topk output (one row per closed
-    (window, query, doc) at its min (dist, seq_no)): operators/knn.knn_merge,
-    the same stage 2 the batch knn_windowed runs — per-doc dedup keep min
-    (KNNQuery.java:226-238), global rank, cut at k, one exchange."""
-    return knn_merge(batch_df)
+    """Batch-side final merge for stream_knn_topk output: the global rank
+    and the cut at k (operators/knn.knn_rank_cut, the end of the batch
+    knn_merge), one exchange. The streaming aggregation already emits one
+    row per closed (window, query, doc) at its min (dist, seq_no), so the
+    per-doc dedup of knn_merge would remove nothing here."""
+    return knn_rank_cut(batch_df)
 
 
 # ---- streaming decontamination ---------------------------------------------

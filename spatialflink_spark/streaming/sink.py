@@ -16,8 +16,10 @@ the SAME protocol on a parquet directory layout:
                         exactly Iceberg's replace-by-key outcome for
                         deterministic batches keyed (window, doc_id))
 - _ledger/N.json        committed AFTER the data write, atomically
-                        (os.replace); carries lineage: per-partition input
-                        row counts, output rows, key range, wall time
+                        (os.replace); carries lineage: per-partition row
+                        counts, output rows, key range, wall time — read
+                        from the footers of the files the write just made
+                        (footer_lineage), so a micro-batch is ONE Spark job
 - a batch is visible iff its ledger entry exists -> readers see
   exactly-once output even if the job dies between data write and commit
   (the orphaned data dir is invisible and gets overwritten on replay).
@@ -35,9 +37,77 @@ import json
 import os
 import time
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+# key types whose parquet footer min/max order is Spark's own order: signed
+# integers, booleans, dates and UTF-8 strings (unsigned byte order, which is
+# code point order). Floats (NaN sorts above every number in Spark, footers
+# skip it) and timestamps (INT96 footers carry no bounds, and Spark returns
+# session-local datetimes) are not sink keys.
+_FOOTER_ORDERED = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.DateType, T.StringType,
+)
+
+
+def _footers(path: str) -> list[tuple[int, str, pq.FileMetaData]]:
+    """(partition id, file, footer) of every non-empty data file Spark's
+    parquet writer left in `path`. A data file is
+    `part-<partition id>-<uuid>-c<seq>...parquet`; one partition writes
+    several when spark.sql.files.maxRecordsPerFile splits it. Zero-row files
+    are dropped: Spark writes one for an empty result, and it held no rows."""
+    out = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            f = os.path.join(path, name)
+            md = pq.read_metadata(f)
+            if md.num_rows:
+                out.append((int(name.split("-")[1]), f, md))
+    return out
+
+
+def _column_range(f: str, md: pq.FileMetaData, col: str) -> tuple:
+    """(min, max) of `col` in one non-empty data file, (None, None) when
+    every value is null. From the row-group statistics; parquet-mr leaves
+    min/max out of the footer for binary values over 4 KB, and for such a
+    file the column is read with pyarrow instead."""
+    j = next(j for j in range(md.num_columns) if md.schema.column(j).path == col)
+    lo, hi = [], []
+    for g in range(md.num_row_groups):
+        cc = md.row_group(g).column(j)
+        s = cc.statistics
+        if s is not None and s.has_min_max:
+            lo.append(s.min)
+            hi.append(s.max)
+        elif s is None or not s.has_null_count or s.null_count != cc.num_values:
+            mm = pc.min_max(pq.read_table(f, columns=[col]).column(col))
+            return mm["min"].as_py(), mm["max"].as_py()
+    return (min(lo), max(hi)) if lo else (None, None)
+
+
+def footer_lineage(path: str, keys: list[str]) -> tuple[dict[int, int], dict[str, tuple]]:
+    """Per-partition row counts and per-key (min, max) of the parquet
+    dataset just written to `path`, read from its footers on the driver —
+    no Spark job. Rows sum per partition id; (None, None) for a key that is
+    null in every row."""
+    part_rows: dict[int, int] = {}
+    lo: dict[str, list] = {c: [] for c in keys}
+    hi: dict[str, list] = {c: [] for c in keys}
+    for pid, f, md in _footers(path):
+        part_rows[pid] = part_rows.get(pid, 0) + md.num_rows
+        for c in keys:
+            a, b = _column_range(f, md, c)
+            if a is not None:
+                lo[c].append(a)
+                hi[c].append(b)
+    return part_rows, {
+        c: (min(lo[c], default=None), max(hi[c], default=None)) for c in keys
+    }
 
 
 class ExactlyOnceSink:
@@ -76,41 +146,31 @@ class ExactlyOnceSink:
             df.write.format("noop").mode("overwrite").save()
             return
         t0 = time.time()
-        # persist the micro-batch: the plan below it (stateful agg etc.) must
-        # compute ONCE — round 1 ran three uncached actions per batch,
-        # re-executing the whole streaming plan 3x (VERDICT What's-wrong #4)
-        df = df.persist()
-        try:
-            keys = [c for c in self.key_cols if c in df.columns]
-            # single action: per-partition lineage counts (the per-pipe
-            # in/out counters of CountingMap.java:14-38) AND per-partition
-            # key min/max, combined driver-side into the global key range
-            rows = (
-                df.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    *[F.min(c).alias(f"min_{c}") for c in keys],
-                    *[F.max(c).alias(f"max_{c}") for c in keys],
+        keys = [c for c in self.key_cols if c in df.columns]
+        for c in keys:
+            if not isinstance(df.schema[c].dataType, _FOOTER_ORDERED):
+                raise TypeError(
+                    f"sink key {c!r} is {df.schema[c].dataType.simpleString()}: "
+                    "keys must be integer, boolean, date or string columns"
                 )
-                .collect()
-            )
-            part_counts = [r["cnt"] for r in rows]
-            n_out = sum(part_counts)
-            stats = {}
-            if n_out:
-                for c in keys:
-                    mins = [r[f"min_{c}"] for r in rows if r[f"min_{c}"] is not None]
-                    maxs = [r[f"max_{c}"] for r in rows if r[f"max_{c}"] is not None]
-                    stats[f"min_{c}"] = min(mins) if mins else None
-                    stats[f"max_{c}"] = max(maxs) if maxs else None
-            out_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
-            df.write.mode("overwrite").parquet(out_path)  # reads from cache
-        finally:
-            df.unpersist()
+        # ONE action per micro-batch: the parquet write. The lineage (the
+        # per-pipe in/out counters of CountingMap.java:14-38 plus the key
+        # range) is read back from the footers of the files it just wrote,
+        # the way an Iceberg manifest carries each data file's record count
+        # and column bounds — so the micro-batch's plan runs once, with no
+        # persist and no second job.
+        out_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        df.write.mode("overwrite").parquet(out_path)
+        part_rows, ranges = footer_lineage(out_path, keys)
+        n_out = sum(part_rows.values())
+        stats = {}
+        if n_out:
+            for c in keys:
+                stats[f"min_{c}"], stats[f"max_{c}"] = ranges[c]
         lineage = {
             "batch_id": batch_id,
             "rows_out": n_out,
-            "partition_rows": sorted(part_counts),
+            "partition_rows": sorted(part_rows.values()),
             "key_range": {k: (str(v) if v is not None else None) for k, v in stats.items()},
             "wall_s": round(time.time() - t0, 3),
             "committed_at": time.time(),
@@ -177,7 +237,7 @@ class ExactlyOnceSink:
             return {"compact_watermark": w_old, "noop": True}
         out = os.path.join(self.data_dir, f"compact={w}")
         self.read_merged(spark).write.mode("overwrite").parquet(out)
-        n = spark.read.parquet(out).count()
+        n = sum(md.num_rows for _, _, md in _footers(out))
         entry = {
             "compact_watermark": w,
             "rows": n,

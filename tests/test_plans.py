@@ -548,11 +548,11 @@ def test_local_table_matches_create_dataframe(spark):
 
 
 def test_knn_merge_single_exchange(spark):
-    """Stage 2 of the two-stage kNN (the streaming finalize_knn and the
-    batch knn_windowed share it) partitions once on (ws, q_id): the per-doc
-    groupBy and the rank window both reuse that exchange."""
+    """Stage 2 of the two-stage kNN (knn_windowed and every geometry kNN
+    end in it) partitions once on (ws, q_id): the per-doc groupBy and the
+    rank window both reuse that exchange."""
+    from spatialflink_spark.operators.knn import knn_merge
     from spatialflink_spark.session import local_table
-    from spatialflink_spark.streaming.pipeline import finalize_knn
 
     cut = local_table(
         spark,
@@ -564,12 +564,40 @@ def test_knn_merge_single_exchange(spark):
         ],
         "ws bigint, q_id string, k int, doc_id bigint, dist int, seq_no int",
     )
-    df = finalize_knn(cut)
+    df = knn_merge(cut)
     assert plans.exchange_count(df) == 1, plans.simple_plan(df)
     # doc 7 keeps its min (dist, seq_no); ties break on doc_id
     assert [tuple(r) for r in df.orderBy("rank").collect()] == [
         (0, "q", 1, 7, 1, 1),
         (0, "q", 2, 9, 0, 1),
+    ]
+
+
+def test_finalize_knn_ranks_without_dedup(spark):
+    """The streaming kNN's per-micro-batch merge gets one row per (ws,
+    q_id, doc_id) from the stream aggregation, so it is the rank and cut
+    alone (knn.knn_rank_cut): no per-doc SortAggregate, one exchange."""
+    from spatialflink_spark.session import local_table
+    from spatialflink_spark.streaming.pipeline import finalize_knn
+
+    batch = local_table(
+        spark,
+        [
+            (0, "q", 2, 7, 1, 1),
+            (0, "q", 2, 8, 2, 0),
+            (0, "q", 2, 9, 1, 0),
+            (60, "q", 2, 7, 5, 3),
+        ],
+        "ws bigint, q_id string, k int, doc_id bigint, dist int, seq_no int",
+    )
+    df = finalize_knn(batch)
+    plan = plans.simple_plan(df)
+    assert "SortAggregate" not in plan and "HashAggregate" not in plan, plan
+    assert plans.exchange_count(df) == 1, plan
+    assert [tuple(r) for r in df.orderBy("ws", "rank").collect()] == [
+        (0, "q", 1, 7, 1, 1),
+        (0, "q", 2, 9, 0, 1),
+        (60, "q", 1, 7, 3, 5),
     ]
 
 

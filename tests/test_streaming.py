@@ -1480,6 +1480,9 @@ def test_sink_compaction_equivalence_and_vacuum(spark, tmp_path):
     entry = a.compact(spark)
     assert entry["compact_watermark"] == 2
     assert entry["folded_batches"] == [0, 1, 2]
+    # rows (from the segment's footers) is the segment's row count
+    seg = str(tmp_path / "a" / "data" / "compact=2")
+    assert entry["rows"] == spark.read.parquet(seg).count() == 6
     # vacuum removed the folded batch dirs; ledgers retained
     for bid in (0, 1, 2):
         assert not os.path.exists(str(tmp_path / "a" / "data" / f"batch_id={bid}"))
@@ -1545,6 +1548,131 @@ def test_sink_compaction_crash_before_commit_is_invisible(spark, tmp_path):
         s.read_merged(spark).toPandas().sort_values("k").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(before, final)
+
+
+def _aggregate_lineage(df, keys):
+    """Reference lineage: the per-partition count/min/max aggregation the
+    sink ran as a second job before it read its footers."""
+    import pyspark.sql.functions as F
+
+    rows = (
+        df.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            *[F.min(c).alias(f"min_{c}") for c in keys],
+            *[F.max(c).alias(f"max_{c}") for c in keys],
+        )
+        .collect()
+    )
+    counts = [r["cnt"] for r in rows]
+    stats = {}
+    if sum(counts):
+        for c in keys:
+            for agg, pick in (("min", min), ("max", max)):
+                vals = [r[f"{agg}_{c}"] for r in rows if r[f"{agg}_{c}"] is not None]
+                stats[f"{agg}_{c}"] = str(pick(vals)) if vals else None
+    return {"rows_out": sum(counts), "partition_rows": sorted(counts), "key_range": stats}
+
+
+def test_footer_lineage_matches_aggregate_lineage(spark, tmp_path):
+    """The ledger's lineage read from the written files' footers equals the
+    per-partition aggregate over the micro-batch, on the edge cases where
+    footers and partitions could disagree."""
+    import pyspark.sql.functions as F
+
+    from spatialflink_spark.streaming.sink import _footers
+
+    big = "m" * 5000  # parquet-mr drops min/max for binary values over 4 KB
+    rng = spark.range(0, 1000, numPartitions=5)
+    cases = {
+        "partitions": rng.select(
+            (F.col("id") - 500).alias("k"), F.expr("cast(id % 7 - 3 as int)").alias("i"),
+            F.expr("concat('s', id)").alias("s"),
+        ),
+        "empty_partitions": spark.range(0, 3, numPartitions=6).withColumnRenamed("id", "k"),
+        "empty_batch": rng.where("id < 0").withColumnRenamed("id", "k"),
+        "all_null_keys": rng.select(
+            F.lit(None).cast("bigint").alias("k"), F.lit(None).cast("string").alias("s"),
+        ),
+        "some_null_keys": rng.select(
+            F.expr("IF(id % 3 = 0, NULL, id)").alias("k"),
+            F.expr("IF(id < 500, NULL, cast(id as string))").alias("s"),
+        ),
+        "non_ascii": spark.createDataFrame(
+            [("é", 1), ("z", 2), ("日本", 3), ("Z", 4), ("😀", 5), ("ａ", 6)], "s string, k int"
+        ).repartition(3, "k"),
+        "negative_ints": spark.createDataFrame(
+            [(-(2**63), -(2**31)), (-1, -7), (5, 2**31 - 1)], "k bigint, i int"
+        ).repartition(2, "k"),
+        "over_4kb_key": spark.createDataFrame(
+            [(big, 1), ("a", 2), (big + "z", 3), ("b", 4)], "s string, k int"
+        ).repartition(2, "k"),
+        "bool_date_short": spark.createDataFrame(
+            [(1, True), (-2, False), (3, None)], "k smallint, b boolean"
+        ).select("k", "b", F.expr("date_add(date'2024-02-28', k)").alias("t")),
+    }
+    sinks = {}
+    for name, df in cases.items():
+        keys = [c for c in ("k", "i", "s", "b", "t") if c in df.columns]
+        sinks[name] = ExactlyOnceSink(str(tmp_path / name), key_cols=tuple(keys))
+        df = df.persist()
+        want = _aggregate_lineage(df, keys)
+        sinks[name].write_batch(df, 0)
+        df.unpersist()
+        got = sinks[name].lineage()[0]
+        assert {k: got[k] for k in want} == want, name
+    # the >4 KB case really read a file whose footer lacks the bounds
+    assert any(
+        not md.row_group(0).column(0).statistics.has_min_max
+        for _, _, md in _footers(str(tmp_path / "over_4kb_key" / "data" / "batch_id=0"))
+    )
+    assert sinks["over_4kb_key"].lineage()[0]["key_range"]["max_s"] == big + "z"
+    # a key type whose footer order is not Spark's is refused before writing
+    with pytest.raises(TypeError, match="double"):
+        ExactlyOnceSink(str(tmp_path / "d"), key_cols=("d",)).write_batch(
+            rng.selectExpr("cast(id as double) as d"), 0
+        )
+    assert not os.path.exists(str(tmp_path / "d" / "data" / "batch_id=0"))
+
+    # one partition split into several files still sums per partition id
+    df = rng.select(F.col("id").alias("k")).persist()
+    want = _aggregate_lineage(df, ["k"])
+    split = ExactlyOnceSink(str(tmp_path / "split"), key_cols=("k",))
+    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        split.write_batch(df, 0)
+    finally:
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
+        df.unpersist()
+    out = str(tmp_path / "split" / "data" / "batch_id=0")
+    assert len(_footers(out)) == 1000
+    got = split.lineage()[0]
+    assert {k: got[k] for k in want} == want
+    assert got["partition_rows"] == [200] * 5
+
+
+def test_write_batch_is_one_spark_job(spark, tmp_path):
+    """A micro-batch costs exactly one Spark job on the commit path (the
+    parquet write; lineage comes from its footers) and on the replay path
+    (the noop write that consumes an already-committed batch)."""
+    sc = spark.sparkContext
+    sink = ExactlyOnceSink(str(tmp_path / "out"), key_cols=("k",))
+    df = spark.range(0, 100, numPartitions=4).withColumnRenamed("id", "k")
+
+    def jobs(group, bid):
+        sc.setJobGroup(group, group)
+        try:
+            sink.write_batch(df, bid)
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(f"sink-commit-{id(sink)}", 0) == 1
+    assert jobs(f"sink-replay-{id(sink)}", 0) == 1
+    assert sink.lineage()[0]["rows_out"] == 100
 
 
 def test_stream_neardup_window_stats_matches_batch(spark, replay_dir, tmp_path):
