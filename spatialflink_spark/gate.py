@@ -519,17 +519,8 @@ def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# staged-replay config shared by the four stream_*_e2e gates: event-time
-# slices staged once per (session, sf_dir). The availableNow gate run drains
-# ALL staged files in one trigger — the file source's own availableNow
-# behavior when maxFilesPerTrigger doesn't cap it — which cannot change
-# output: slices are event-time-ordered (stage_replay_files cuts at ts
-# quantiles), so no row is ever late relative to an earlier slice's
-# watermark, and the final watermark — hence the set of closed windows — is
-# identical (verified: byte-identical committed output at mft 1 vs 2;
-# ~2x wall saving per gate run). Multi-batch watermark advancement and
-# kill/resume stay covered by tests/test_streaming.py, which replay with
-# maxFilesPerTrigger=1.
+from spatialflink_spark.streaming import pipeline as stream_ops  # noqa: E402
+
 _REPLAY_SLICES = 2
 
 _STREAM_STATIC_CACHE: dict[tuple[str, str, str], DataFrame] = {}
@@ -556,67 +547,94 @@ def _stream_static(spark: SparkSession, sf_dir: str, key: str, build):
     return df
 
 
-def q_stream_range_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL Structured Streaming path inside the correctness gate:
-    stage the sequence table as an event-time-sliced replay, run the watermarked
-    tumbling range-count through availableNow + the exactly-once sink, and
-    return the committed output. Oracle = batch counts over windows the
-    final watermark closed (ws + tumbling <= max_ts - lateness)."""
+def _stream_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    key_cols: tuple[str, ...],
+    build,
+    *,
+    pre_watermark_filter: str | None = None,
+    finalize=None,
+    output_mode: str = "append",
+) -> ExactlyOnceSink:
+    """The REAL Structured Streaming path inside the correctness gate, shared
+    by every stream_*_e2e query: stage the sequence table as an event-time-
+    sliced replay, read it watermarked, drain `build(stream)` through
+    availableNow into a fresh exactly-once sink keyed on `key_cols`, and
+    return the sink for the gate to read (read_committed, or read_merged
+    for a keyed changelog). `pre_watermark_filter` is applied structurally
+    below the watermark (read_sequences_stream); `finalize`, when given,
+    maps each micro-batch before the sink writes it.
+
+    The replay is staged once per (session, sf_dir) as _REPLAY_SLICES
+    slices, and one availableNow trigger drains them all — the file
+    source's own availableNow behavior when maxFilesPerTrigger doesn't cap
+    it — which cannot change output: slices are event-time-ordered
+    (stage_replay_files cuts at ts quantiles), so no row is ever late
+    relative to an earlier slice's watermark, and the final watermark —
+    hence the set of closed windows — is identical (verified: byte-identical
+    committed output at mft 1 vs 2; ~2x wall saving per gate run).
+    Multi-batch watermark advancement and kill/resume stay covered by
+    tests/test_streaming.py, which replays with maxFilesPerTrigger=1.
+
+    The state-store partition count is fixed at the first checkpoint
+    write; 4 is plenty for the gates' key spaces and cuts per-batch fixed
+    cost (a deployment-size knob, not an engine property — a real cluster
+    job sizes it to executors*cores). The session's previous value is
+    restored on the way out, error or not."""
     import tempfile
 
     from spatialflink_spark.sources.streams import (
         read_sequences_stream,
         stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_range_count,
     )
     from spatialflink_spark.streaming.sink import ExactlyOnceSink
 
     root = tempfile.mkdtemp(prefix="sfs_gate_stream_")
     replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "q_id"))
-    # state-store partition count is fixed at first checkpoint write; 4 is
-    # plenty for the (window, q_id) key space and cuts per-batch fixed cost
-    # (a deployment-size knob, not an engine property — a real cluster job
-    # sizes it to executors*cores)
+    sink = ExactlyOnceSink(f"{root}/out", key_cols=key_cols)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
+            spark,
+            replay,
+            C.allowed_lateness_s,
             max_files_per_trigger=_REPLAY_SLICES,
+            pre_watermark_filter=pre_watermark_filter,
         )
-        res = stream_range_count(stream, C, DEFAULT_QUERY_POINTS)
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
+        stream_ops.run_available_now(
+            build(stream),
+            lambda df, bid: sink.write_batch(
+                df if finalize is None else finalize(df), bid
+            ),
+            f"{root}/ckpt",
+            output_mode=output_mode,
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    return sink
+
+
+def q_stream_range_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The watermarked tumbling range-count (pipeline.stream_range_count)
+    through the stream gate harness, returning the committed output.
+    Oracle = batch counts over windows the final watermark closed
+    (ws + tumbling <= max_ts - lateness)."""
+    return _stream_gate(
+        spark,
+        sf_dir,
+        ("ws", "q_id"),
+        lambda s: stream_ops.stream_range_count(s, C, DEFAULT_QUERY_POINTS),
+    ).read_committed(spark)
 
 
 def q_stream_decon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third end-to-end Structured Streaming path in the gate — the
-    CURATION ingest: staged replay -> watermark -> streaming decontamination
-    (static broadcast probe, stateless per-row filter) -> tumbling
-    per-source survivor counts -> exactly-once sink. Oracle = the same
-    filter + counts in batch over watermark-closed windows.
-    Output: ws, source, n_kept, tok_kept."""
-    import tempfile
-
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_decontaminate,
-        token_shingle_expr,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_decon_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
+    """The CURATION ingest as a stream: staged replay -> watermark ->
+    streaming decontamination (static broadcast probe, stateless per-row
+    filter) -> tumbling per-source survivor counts -> exactly-once sink.
+    Oracle = the same filter + counts in batch over watermark-closed
+    windows. Output: ws, source, n_kept, tok_kept."""
     # materialize the shingle arrays before the explode (the CLAUDE.md
     # explode-amplification trap), and EAGERLY materialize the tiny distinct
     # probe: a lazy static side of a stream-static join is re-derived every
@@ -630,122 +648,73 @@ def q_stream_decon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (
             sequences_cached(spark, sf_dir)
             .where("doc_id % 13 = 0")
-            .select(F.expr(token_shingle_expr()).alias("_sh"))
+            .select(F.expr(stream_ops.token_shingle_expr()).alias("_sh"))
             .localCheckpoint(eager=False)
             .select(F.explode("_sh").alias("h"))
             .distinct()
             .localCheckpoint()
         ),
     )
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "source"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        # streaming edition of the single-partition trap: each replay slice
-        # is one file, so every micro-batch is ONE task and the per-row
-        # probe-set intersect runs serially (measured 18s -> 2.7s at sf0.1
-        # with the shuffle). The repartition count is independent of the
-        # state-store partition count set below.
-        # the probe filter goes BELOW the watermark structurally (not via
-        # pushdown) — the oracle's watermark basis is max ts over non-probe
-        # rows only, so this must hold by plan construction
-        stream = read_sequences_stream(
-            spark,
-            replay,
-            C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-            pre_watermark_filter="doc_id % 13 <> 0",
-        ).repartition(spark.sparkContext.defaultParallelism)
-        surv = stream_decontaminate(stream, probe)
-        res = (
-            surv.groupBy(
-                F.window("event_ts", f"{C.tumbling_s} seconds").alias("win"),
-                "source",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_kept"),
-                F.sum(F.col("n_tok").cast("bigint")).alias("tok_kept"),
-            )
-            .select(
-                F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-                "source",
-                "n_kept",
-                "tok_kept",
-            )
+
+    def build(stream):
+        spread = stream_ops.spread_stream(stream)
+        surv = stream_ops.stream_decontaminate(spread, probe)
+        return stream_ops.tumbling_agg(
+            surv,
+            C,
+            ("source",),
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum(F.col("n_tok").cast("bigint")).alias("tok_kept"),
         )
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+
+    # the probe filter goes BELOW the watermark structurally (not via
+    # pushdown) — the oracle's watermark basis is max ts over non-probe
+    # rows only, so this must hold by plan construction
+    return _stream_gate(
+        spark, sf_dir, ("ws", "source"), build, pre_watermark_filter="doc_id % 13 <> 0"
+    ).read_committed(spark)
 
 
-def q_stream_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fourth end-to-end Structured Streaming path — streaming SOURCE MIXING,
-    completing the streaming curation family (dedup, decon, mix): staged
-    replay -> watermark -> quota-rate broadcast + LCG keep-filter
-    (stateless) -> tumbling per-(source, rate) survivor counts ->
-    exactly-once sink. Rates come from a static snapshot of the same table
-    (mixing.mix_rates_snapshot). Oracle = identical integer arithmetic in
-    batch over watermark-closed windows.
+def _stream_mix_gate(spark: SparkSession, sf_dir: str, cache_key: str, snapshot):
+    """Streaming source mixing under the rate kernel `snapshot` (a
+    mixing.*_rates_snapshot over the static table): staged replay ->
+    watermark -> rate broadcast + LCG keep-filter (stateless,
+    pipeline.stream_source_mix, which is rate-table-agnostic) -> tumbling
+    per-(source, rate) survivor counts -> exactly-once sink.
     Output: ws, source, rate_bp, n_kept, tok_kept."""
-    import tempfile
-
-    from spatialflink_spark.operators.mixing import mix_rates_snapshot
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_source_mix,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_mix_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
     # eager checkpoint: a lazy static side of a stream-static join re-derives
     # the whole snapshot aggregation every micro-batch (same trap as the
-    # decon probe above); the rate table is one row per source.
-    # Session-cached static artifact (see _stream_static).
+    # decon probe); the rate table is one row per source. Session-cached
+    # static artifact (see _stream_static).
     rates = _stream_static(
         spark,
         sf_dir,
-        "mix_rates",
-        lambda: mix_rates_snapshot(
-            sequences_cached(spark, sf_dir)
-        ).localCheckpoint(),
+        cache_key,
+        lambda: snapshot(sequences_cached(spark, sf_dir)).localCheckpoint(),
     )
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "source"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        )
-        surv = stream_source_mix(stream, rates)
-        res = (
-            surv.groupBy(
-                F.window("event_ts", f"{C.tumbling_s} seconds").alias("win"),
-                "source",
-                "rate_bp",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_kept"),
-                F.sum(F.col("n_tok").cast("bigint")).alias("tok_kept"),
-            )
-            .select(
-                F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-                "source",
-                "rate_bp",
-                "n_kept",
-                "tok_kept",
-            )
-        )
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    return _stream_gate(
+        spark,
+        sf_dir,
+        ("ws", "source"),
+        lambda s: stream_ops.tumbling_agg(
+            stream_ops.stream_source_mix(s, rates),
+            C,
+            ("source", "rate_bp"),
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum(F.col("n_tok").cast("bigint")).alias("tok_kept"),
+        ),
+    ).read_committed(spark)
+
+
+def q_stream_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming SOURCE MIXING, completing the streaming curation family
+    (dedup, decon, mix): quota rates from a static snapshot of the same
+    table (mixing.mix_rates_snapshot) through _stream_mix_gate. Oracle =
+    identical integer arithmetic in batch over watermark-closed windows.
+    Output: ws, source, rate_bp, n_kept, tok_kept."""
+    from spatialflink_spark.operators.mixing import mix_rates_snapshot
+
+    return _stream_mix_gate(spark, sf_dir, "mix_rates", mix_rates_snapshot)
 
 
 def q_count_windows_tumbling(spark: SparkSession, sf_dir: str, size: int = 4) -> DataFrame:
@@ -915,44 +884,19 @@ def q_pack_bins_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_knn_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second end-to-end Structured Streaming path in the gate: watermarked
-    tumbling kNN — a built-in append-mode aggregation keeps each candidate
-    doc's min (dist, seq_no) per (window, query) in the state store
-    (pipeline.stream_knn_topk, no Python worker), batch-side final rank and
-    cut at k per emitted micro-batch, through the exactly-once sink. Oracle
-    = batch kNN over windows the final watermark closed."""
-    import tempfile
-
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        finalize_knn,
-        run_available_now,
-        stream_knn_topk,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_sknn_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "q_id", "rank"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        )
-        topk = stream_knn_topk(stream, C, DEFAULT_QUERY_POINTS)
-
-        def fb(df, bid):
-            sink.write_batch(finalize_knn(df), bid)
-
-        run_available_now(topk, fb, f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    """Watermarked tumbling kNN as a stream: a built-in append-mode
+    aggregation keeps each candidate doc's min (dist, seq_no) per (window,
+    query) in the state store (pipeline.stream_knn_topk, no Python worker),
+    batch-side final rank and cut at k per emitted micro-batch
+    (pipeline.finalize_knn), through the exactly-once sink. Oracle = batch
+    kNN over windows the final watermark closed."""
+    return _stream_gate(
+        spark,
+        sf_dir,
+        ("ws", "q_id", "rank"),
+        lambda s: stream_ops.stream_knn_topk(s, C, DEFAULT_QUERY_POINTS),
+        finalize=stream_ops.finalize_knn,
+    ).read_committed(spark)
 
 
 # ---- interval (polygon-analog) type combos ----------------------------------
@@ -1213,124 +1157,52 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seventh end-to-end Structured Streaming path — NEAR-DUP incidence
-    monitoring at ingest: staged replay -> watermark -> per-row 60-bit wide
-    SimHash (the shared dedup.with_wide_simhash kernel, stateless codegen)
-    -> tumbling per-(window, fingerprint) counts -> exactly-once sink.
-    Completes the streaming curation family's dedup face with a WINDOWED
-    aggregate (stream_neardup_dedup is the global drop-duplicates face).
-    Oracle = identical fingerprint + counts in batch over watermark-closed
-    windows. Output: ws, simhash, n_rows, tok_rows."""
-    import tempfile
-
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_neardup_window_stats,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_neardup_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "simhash"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        # each replay slice is ONE file -> repartition the micro-batch or
-        # the per-row fingerprint (120 aggregates over the token array)
-        # runs serially (the streaming single-partition trap, CLAUDE.md)
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        ).repartition(spark.sparkContext.defaultParallelism)
-        res = stream_neardup_window_stats(stream, C)
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    """NEAR-DUP incidence monitoring at ingest: staged replay -> watermark
+    -> per-row 60-bit wide SimHash (the shared dedup.with_wide_simhash
+    kernel, stateless codegen) -> tumbling per-(window, fingerprint) counts
+    -> exactly-once sink. The streaming curation family's dedup face as a
+    WINDOWED aggregate (stream_neardup_dedup is the global drop-duplicates
+    face). Oracle = identical fingerprint + counts in batch over
+    watermark-closed windows. Output: ws, simhash, n_rows, tok_rows."""
+    return _stream_gate(
+        spark,
+        sf_dir,
+        ("ws", "simhash"),
+        lambda s: stream_ops.stream_neardup_window_stats(
+            stream_ops.spread_stream(s), C
+        ),
+    ).read_committed(spark)
 
 
 def q_stream_chunk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eighth end-to-end Structured Streaming path — context-window
-    CHUNKING at ingest: staged replay -> watermark -> per-row overlapping
-    fixed-width chunk slicing (the chunk_documents width/stride constants;
-    stateless, no explode — counts and token sums fold per row) ->
-    tumbling per-(window, source) chunk volume -> exactly-once sink.
-    Oracle = the same slicing arithmetic in batch over watermark-closed
-    windows. Output: ws, source, n_chunks, chunk_tok, n_rows."""
-    import tempfile
-
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_chunk_stats,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_chunk_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "source"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        )
-        res = stream_chunk_stats(stream, C)
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    """Context-window CHUNKING at ingest: staged replay -> watermark ->
+    per-row overlapping fixed-width chunk slicing (the chunk_documents
+    width/stride constants; stateless, no explode — counts and token sums
+    fold per row) -> tumbling per-(window, source) chunk volume ->
+    exactly-once sink. Oracle = the same slicing arithmetic in batch over
+    watermark-closed windows. Output: ws, source, n_chunks, chunk_tok,
+    n_rows."""
+    return _stream_gate(
+        spark,
+        sf_dir,
+        ("ws", "source"),
+        lambda s: stream_ops.stream_chunk_stats(s, C),
+    ).read_committed(spark)
 
 
 def q_stream_vocab_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fifth end-to-end Structured Streaming path — VOCABULARY NOVELTY at
-    ingest: staged replay -> update-mode first-arrival per token (state
-    bounded by |vocab|, streaming/pipeline.stream_vocab_first) -> keyed
-    changelog sink -> MERGE-on-read snapshot (the first gate through
-    sink.read_merged) -> per-closed-window novelty counts + cumulative
-    vocabulary. Oracle = min ts_s per token over the same static table,
-    identical closed-window filter. Output: ws, n_new_tokens, cum_vocab."""
-    import tempfile
-
+    """VOCABULARY NOVELTY at ingest: staged replay -> update-mode
+    first-arrival per token (state bounded by |vocab|,
+    pipeline.stream_vocab_first) -> keyed changelog sink -> MERGE-on-read
+    snapshot (sink.read_merged) -> per-closed-window novelty counts +
+    cumulative vocabulary. Oracle = min ts_s per token over the same static
+    table, identical closed-window filter. Output: ws, n_new_tokens,
+    cum_vocab."""
     from pyspark.sql.window import Window
 
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_vocab_first,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
-
-    root = tempfile.mkdtemp(prefix="sfs_gate_vocab_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("tok",))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        )
-        run_available_now(
-            stream_vocab_first(stream),
-            sink.foreach_batch(),
-            f"{root}/ckpt",
-            output_mode="update",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    snap = sink.read_merged(spark)
+    snap = _stream_gate(
+        spark, sf_dir, ("tok",), stream_ops.stream_vocab_first, output_mode="update"
+    ).read_merged(spark)
     # committed-output discipline: only windows the final watermark sealed
     # (the same `ws + tumbling <= max(ts_s) - lateness` rule the append-mode
     # gates get from the engine itself)
@@ -1595,68 +1467,14 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_tmix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sixth end-to-end Structured Streaming path — streaming TEMPERATURE
-    mixing: the q_stream_mix_e2e pipeline verbatim with the tau=0.5 rate
+    """Streaming TEMPERATURE mixing: q_stream_mix_e2e with the tau=0.5 rate
     kernel (mixing.temperature_rates_snapshot) plugged into the same
-    stateless broadcast keep-filter (streaming/pipeline.stream_source_mix
-    is rate-table-agnostic by design). Oracle = identical integer-div-
-    before-sqrt arithmetic in batch over watermark-closed windows.
+    _stream_mix_gate. Oracle = identical integer-div-before-sqrt arithmetic
+    in batch over watermark-closed windows.
     Output: ws, source, rate_bp, n_kept, tok_kept."""
-    import tempfile
-
     from spatialflink_spark.operators.mixing import temperature_rates_snapshot
-    from spatialflink_spark.sources.streams import (
-        read_sequences_stream,
-        stage_replay_files_cached,
-    )
-    from spatialflink_spark.streaming.pipeline import (
-        run_available_now,
-        stream_source_mix,
-    )
-    from spatialflink_spark.streaming.sink import ExactlyOnceSink
 
-    root = tempfile.mkdtemp(prefix="sfs_gate_tmix_")
-    replay = stage_replay_files_cached(spark, sf_dir, n_batches=_REPLAY_SLICES)
-    # eager checkpoint + session cache: same posture as the quota-rate path
-    rates = _stream_static(
-        spark,
-        sf_dir,
-        "tmix_rates",
-        lambda: temperature_rates_snapshot(
-            sequences_cached(spark, sf_dir)
-        ).localCheckpoint(),
-    )
-    sink = ExactlyOnceSink(f"{root}/out", key_cols=("ws", "source"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = read_sequences_stream(
-            spark, replay, C.allowed_lateness_s,
-            max_files_per_trigger=_REPLAY_SLICES,
-        )
-        surv = stream_source_mix(stream, rates)
-        res = (
-            surv.groupBy(
-                F.window("event_ts", f"{C.tumbling_s} seconds").alias("win"),
-                "source",
-                "rate_bp",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_kept"),
-                F.sum(F.col("n_tok").cast("bigint")).alias("tok_kept"),
-            )
-            .select(
-                F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-                "source",
-                "rate_bp",
-                "n_kept",
-                "tok_kept",
-            )
-        )
-        run_available_now(res, sink.foreach_batch(), f"{root}/ckpt")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_committed(spark)
+    return _stream_mix_gate(spark, sf_dir, "tmix_rates", temperature_rates_snapshot)
 
 
 def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -108,9 +108,10 @@ def stage_replay_files_cached(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> str:
     """Stage once per (session, sf_dir, n_batches) and reuse: the replay
-    files are a deterministic immutable artifact of the input table, and both
-    end-to-end streaming gate queries (range + kNN) replay the same table —
-    re-deriving and re-writing it per query doubled the staging jobs.
+    files are a deterministic immutable artifact of the input table, and
+    every end-to-end streaming gate query (gate._stream_gate) replays the
+    same table — re-deriving and re-writing it per query multiplied the
+    staging jobs.
     Checkpoints/sinks stay per-query; only the input files are shared.
     Returns the replay directory."""
     import tempfile

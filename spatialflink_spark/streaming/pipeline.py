@@ -25,6 +25,31 @@ from spatialflink_spark.operators.range_query import query_cells_df
 from spatialflink_spark.operators.cells import cell_expr
 
 
+def tumbling_agg(
+    df: DataFrame, cfg: EngineConfig, keys: Iterable[str], *aggs
+) -> DataFrame:
+    """groupBy(tumbling event-time window, *keys).agg(*aggs), projected as
+    (ws bigint window start, *keys, *aggs): the shape of every append-mode
+    tumbling aggregate here, one final row per window the watermark closes."""
+    agged = df.groupBy(
+        F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"), *keys
+    ).agg(*aggs)
+    return agged.select(
+        F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
+        *agged.columns[1:],
+    )
+
+
+def spread_stream(stream: DataFrame) -> DataFrame:
+    """Round-robin each micro-batch over the default parallelism before
+    compute-heavy per-row work. A replay slice is one file, so without this
+    every micro-batch is ONE task and the per-row work runs serially (the
+    streaming single-partition trap: the decon gate's probe intersect went
+    18 s -> 2.7 s at sf0.1 with it). The count is independent of the
+    state-store partition count (spark.sql.shuffle.partitions)."""
+    return stream.repartition(stream.sparkSession.sparkContext.defaultParallelism)
+
+
 def stream_range_count(
     stream: DataFrame, cfg: EngineConfig, qs: Iterable[QueryPoint]
 ) -> DataFrame:
@@ -39,14 +64,7 @@ def stream_range_count(
     matched = s.join(F.broadcast(qcells), "cell").where(
         F.col("guaranteed") | (F.expr("abs(n_tok - q_n_tok)") <= F.col("radius"))
     )
-    counted = matched.groupBy(
-        F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"), "q_id"
-    ).agg(F.count(F.lit(1)).alias("n_matches"))
-    return counted.select(
-        F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-        "q_id",
-        "n_matches",
-    )
+    return tumbling_agg(matched, cfg, ("q_id",), F.count(F.lit(1)).alias("n_matches"))
 
 
 def stream_sliding_variation(stream: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -263,6 +281,10 @@ def stream_knn_topk(
         )
         .select("event_ts", "q_id", "k", "doc_id", F.expr(DIST_SEQ_KEY).alias("_key"))
     )
+    # grouped inline, not via tumbling_agg: the decode below reads _key
+    # twice, so Catalyst keeps it as a Project over the aggregate, and on
+    # top of tumbling_agg's own projection it would move ws into the
+    # aggregate's results instead: the same work under a different plan
     per_doc = cand.groupBy(
         F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"),
         "q_id",
@@ -384,13 +406,7 @@ def stream_token_counts(stream: DataFrame) -> DataFrame:
     reason the batch op's groupBy is scale-safe. Top-k consumption happens
     batch-side per emitted snapshot (heavy hitters over a changelog).
     Output: token, n_occurrences."""
-    # replay slices arrive as ONE file = ONE task per micro-batch; spread
-    # before the explode + partial count or they run serially (the CLAUDE.md
-    # streaming single-partition rule, same fix as the decon gate path)
-    spread_stream = stream.repartition(
-        stream.sparkSession.sparkContext.defaultParallelism
-    )
-    tok = spread_stream.select(F.explode("tokens").alias("token"))
+    tok = spread_stream(stream).select(F.explode("tokens").alias("token"))
     return tok.groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
 
 
@@ -440,13 +456,8 @@ def stream_repetition_filter(
     Output: doc_id, seq_no, n_grams, dup_gram_frac, top_gram_frac, keep."""
     from spatialflink_spark.operators.text import with_repetition
 
-    # per-row compute-heavy lambda work: spread the micro-batch (replay
-    # slices arrive as ONE file = ONE task; CLAUDE.md streaming rule)
-    spread_stream = stream.repartition(
-        stream.sparkSession.sparkContext.defaultParallelism
-    )
     rep = with_repetition(
-        spread_stream.select("doc_id", "seq_no", "n_tok", "tokens"), "tokens"
+        spread_stream(stream).select("doc_id", "seq_no", "n_tok", "tokens"), "tokens"
     )
     return rep.select(
         "doc_id",
@@ -476,12 +487,7 @@ def stream_vocab_first(stream: DataFrame) -> DataFrame:
     counts + cumulative vocabulary) happens batch-side per merged snapshot
     (sink.read_merged — max-batch_id-wins, the Iceberg MERGE-on-read
     shape). Output changelog: tok, first_ts_s."""
-    # replay slices arrive as ONE file = ONE task per micro-batch; spread
-    # before the explode + partial min (CLAUDE.md streaming rule)
-    spread_stream = stream.repartition(
-        stream.sparkSession.sparkContext.defaultParallelism
-    )
-    tok = spread_stream.select(F.explode("tokens").alias("tok"), "ts_s")
+    tok = spread_stream(stream).select(F.explode("tokens").alias("tok"), "ts_s")
     return tok.groupBy("tok").agg(
         F.expr("cast(min(ts_s) as bigint)").alias("first_ts_s")
     )
@@ -491,13 +497,12 @@ def stream_vocab_first(stream: DataFrame) -> DataFrame:
 
 
 def stream_neardup_window_stats(stream: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Windowed near-dup incidence monitoring at ingest — the seventh
-    streaming path: fingerprint every arriving sequence with the 60-bit
-    wide SimHash (the SAME dedup.with_wide_simhash kernel the batch ops and
-    stream_neardup_dedup use) and aggregate per (tumbling window,
-    fingerprint). Downstream this feeds the per-window duplicate-rate
-    dashboards a curation ingest watches (groups with n_rows >= 2 are
-    in-window near-dup collisions).
+    """Windowed near-dup incidence monitoring at ingest: fingerprint every
+    arriving sequence with the 60-bit wide SimHash (the SAME
+    dedup.with_wide_simhash kernel the batch ops and stream_neardup_dedup
+    use) and aggregate per (tumbling window, fingerprint). Downstream this
+    feeds the per-window duplicate-rate dashboards a curation ingest
+    watches (groups with n_rows >= 2 are in-window near-dup collisions).
 
     Scale: the fingerprint is stateless per-row codegen; the only state is
     the windowed aggregation, keyed (window, simhash) and evicted by the
@@ -510,33 +515,24 @@ def stream_neardup_window_stats(stream: DataFrame, cfg: EngineConfig) -> DataFra
         stream.select("event_ts", "doc_id", "seq_no", "n_tok", "tokens"),
         "tokens",
     )
-    return (
-        fp.groupBy(
-            F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"),
-            "simhash",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("n_tok").cast("bigint")).alias("tok_rows"),
-        )
-        .select(
-            F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-            "simhash",
-            "n_rows",
-            "tok_rows",
-        )
+    return tumbling_agg(
+        fp,
+        cfg,
+        ("simhash",),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.col("n_tok").cast("bigint")).alias("tok_rows"),
     )
 
 
 def stream_chunk_stats(stream: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Context-window chunking at ingest — the eighth streaming path: slice
-    every arriving sequence's token array into overlapping fixed-width
-    chunks (the SAME width/stride constants as text.chunk_documents — the
-    RAG-index slicing step applied at the stream head) and aggregate chunk
-    volume per (tumbling window, source). The slicing is a stateless
-    per-row explode (watermark column carried through); the only state is
-    the windowed aggregation. Output: ws, source, n_chunks, chunk_tok,
-    n_rows — append mode on window close."""
+    """Context-window chunking at ingest: slice every arriving sequence's
+    token array into overlapping fixed-width chunks (the SAME width/stride
+    constants as text.chunk_documents — the RAG-index slicing step applied
+    at the stream head) and aggregate chunk volume per (tumbling window,
+    source). The slicing is a stateless per-row explode (watermark column
+    carried through); the only state is the windowed aggregation.
+    Output: ws, source, n_chunks, chunk_tok, n_rows — append mode on
+    window close."""
     from spatialflink_spark.operators.text import CHUNK_S, CHUNK_W
 
     sliced = stream.select(
@@ -555,21 +551,11 @@ def stream_chunk_stats(stream: DataFrame, cfg: EngineConfig) -> DataFrame:
         F.expr("size(_cl)").alias("_n_chunks"),
         F.expr("aggregate(_cl, 0, (a, x) -> a + x)").alias("_chunk_tok"),
     )
-    return (
-        x.groupBy(
-            F.window("event_ts", f"{cfg.tumbling_s} seconds").alias("win"),
-            "source",
-        )
-        .agg(
-            F.expr("cast(sum(_n_chunks) as bigint)").alias("n_chunks"),
-            F.expr("cast(sum(_chunk_tok) as bigint)").alias("chunk_tok"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.expr("cast(unix_timestamp(win.start) as bigint)").alias("ws"),
-            "source",
-            "n_chunks",
-            "chunk_tok",
-            "n_rows",
-        )
+    return tumbling_agg(
+        x,
+        cfg,
+        ("source",),
+        F.expr("cast(sum(_n_chunks) as bigint)").alias("n_chunks"),
+        F.expr("cast(sum(_chunk_tok) as bigint)").alias("chunk_tok"),
+        F.count(F.lit(1)).alias("n_rows"),
     )

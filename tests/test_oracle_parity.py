@@ -23,6 +23,12 @@ def test_parity_small(spark, duck, name):
     assert len(spdf) > 0, f"{name}: empty result is a vacuous pass"
 
 
+def test_every_oracle_has_a_query():
+    """test_parity_small iterates queries() only, so an oracle_sql() entry
+    with no query would go unchecked; the two key sets must be equal."""
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+
+
 @pytest.mark.parametrize(
     "name", ["range_tumbling_count", "knn_sliding", "join_self_tumbling"]
 )

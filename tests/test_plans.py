@@ -788,3 +788,40 @@ def test_similarity_operator_plan(spark, monkeypatch, name):
         above, left = _probe_join_sides(plans.formatted_plan(df))
         assert not any("SQRT(aggregate(" in n for n in left), left
         assert any("SQRT(aggregate(" in n for n in above), above
+
+
+STREAM_GATES = [
+    "stream_range_e2e",
+    "stream_decon_e2e",
+    "stream_mix_e2e",
+    "stream_knn_e2e",
+    "stream_neardup_e2e",
+    "stream_chunk_e2e",
+    "stream_vocab_e2e",
+    "stream_tmix_e2e",
+]
+SPREAD_GATES = {"stream_decon_e2e", "stream_neardup_e2e", "stream_vocab_e2e"}
+
+
+@pytest.mark.parametrize("name", STREAM_GATES)
+def test_stream_gate_spreads_per_row_work(spark, monkeypatch, name):
+    """A replay slice is one file, so a micro-batch is one task unless the
+    gate round-robins it (pipeline.spread_stream). The three gates with
+    compute-heavy per-row work (the decon probe intersect, the wide
+    SimHash, the token explode) must; the others must not pay the extra
+    exchange. Dropping the spread changes no answer, so parity cannot see
+    it: the plan of the frame handed to run_available_now is checked."""
+    from spatialflink_spark.streaming import pipeline
+
+    frames = []
+    real = pipeline.run_available_now
+
+    def capture(result, *args, **kwargs):
+        frames.append(result)
+        return real(result, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "run_available_now", capture)
+    getattr(gate, f"q_{name}")(spark, SF_SMALL)
+    assert len(frames) == 1
+    s = plans.simple_plan(frames[0])
+    assert ("RoundRobinPartitioning" in s) == (name in SPREAD_GATES), s

@@ -1777,3 +1777,45 @@ def test_stream_chunk_stats_matches_batch(spark, replay_dir, tmp_path):
     key = lambda df: sorted(map(tuple, df[cols].values))
     assert key(got) == key(batch)
     assert len(got) > 0
+
+
+def test_stream_gate_restores_shuffle_width(spark):
+    """gate._stream_gate runs every stream gate at a 4-partition state
+    store and must hand the session back with its own
+    spark.sql.shuffle.partitions and no stream left running, whether
+    `build` raises, a micro-batch fails, or the drain succeeds."""
+    from spatialflink_spark import gate
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+
+        def broken_build(stream):
+            assert spark.conf.get(key) == "4"
+            raise RuntimeError("build failed")
+
+        with pytest.raises(RuntimeError, match="build failed"):
+            gate._stream_gate(spark, SF_SMALL, ("ws", "q_id"), broken_build)
+        assert spark.conf.get(key) == "7"
+        assert spark.streams.active == []
+
+        def range_count(stream):
+            return stream_range_count(stream, C, DEFAULT_QUERY_POINTS)
+
+        def broken_finalize(df):
+            raise RuntimeError("finalize failed")
+
+        with pytest.raises(Exception, match="finalize failed"):
+            gate._stream_gate(
+                spark, SF_SMALL, ("ws", "q_id"), range_count, finalize=broken_finalize
+            )
+        assert spark.conf.get(key) == "7"
+        assert spark.streams.active == []
+
+        sink = gate._stream_gate(spark, SF_SMALL, ("ws", "q_id"), range_count)
+        assert spark.conf.get(key) == "7"
+        assert spark.streams.active == []
+        assert sink.read_committed(spark).count() > 0
+    finally:
+        spark.conf.set(key, prev)
